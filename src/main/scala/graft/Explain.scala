@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: dumps `explain("formatted")` of every registered
   * query to <outDir>/<name>.txt for shuffle/broadcast/pushdown review.
   * Usage: runMain graft.Explain <sfDir> <outDir>
@@ -11,43 +9,10 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed-Aggregator groups (BoundedTopK*/BoundedCollect/ModalAgg) keep
-      // BOUNDED buffers, so the ObjectHashAggregate 128-distinct-key sort
-      // fallback only re-introduces the corpus-wide sort the aggregators
-      // exist to avoid (measured: brute hardNegatives 44.4 s -> 13.8 s at
-      // 100x when the map stays hash). 64k keys x k-pair buffers is MBs.
-      // BLAST RADIUS (session-wide, ADVICE r16): this raises the
-      // ObjectHashAggregate sort-fallback for EVERY typed aggregate in the
-      // session, not just the bounded BoundedTopK*/ModalAgg buffers it
-      // exists for. A future aggregator with UNBOUNDED per-group state
-      // (collect_list/percentile-style) over >64k groups per partition
-      // would lose the 128-key memory safety valve — keep new typed
-      // aggregates k-bounded, or scope this per-query via withSQLConf.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // Cached-plan compilation honors AQE (r20): by default
-      // canChangeCachedPlanOutputPartitioning=false compiles every
-      // persisted relation WITHOUT adaptive coalescing, so caches fill at
-      // the raw shuffle width (32 one-row-ish partitions at sf0.1) and
-      // every downstream cache scan pays 32 micro-tasks; with it on, the
-      // cache keeps AQE's size-derived partitioning — the same adaptivity
-      // the rest of the plan already gets, at any scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Serialized shuffle writer - one output file per map task, the
-      // at-scale write path; see Bench.scala for the measured rationale (r20)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // Registry-sized codegen cache - the 100-entry default thrashes
-      // inside iterative queries; see Bench.scala for the rationale (r20)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated query filter (the Bench convention) for
+    // optional comma-separated query filter (as in Verify) for
     // targeted before/after plan capture during optimization rounds
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries.toSeq.sortBy(_._1)

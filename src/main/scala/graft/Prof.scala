@@ -3,12 +3,11 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profile of ONE registry query — the measurement tool the
   * optimization rounds use to attribute a query's task CPU to plan
   * operators before touching anything (guide §1: measure first). Runs the
-  * named query against the given corpus with the Bench session settings,
+  * named query against the given corpus under the [[Session]] policy,
   * then prints every stage's task run time, records, and callsite, task-time
   * descending. Usage: runMain graft.Prof <name> [sfDir] [reps]
   */
@@ -17,29 +16,7 @@ object Prof {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // Cached-plan compilation honors AQE (r20): by default
-      // canChangeCachedPlanOutputPartitioning=false compiles every
-      // persisted relation WITHOUT adaptive coalescing, so caches fill at
-      // the raw shuffle width (32 one-row-ish partitions at sf0.1) and
-      // every downstream cache scan pays 32 micro-tasks; with it on, the
-      // cache keeps AQE's size-derived partitioning — the same adaptivity
-      // the rest of the plan already gets, at any scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Serialized shuffle writer - one output file per map task, the
-      // at-scale write path; see Bench.scala for the measured rationale (r20)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // Registry-sized codegen cache - the 100-entry default thrashes
-      // inside iterative queries; see Bench.scala for the rationale (r20)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     case class St(id: Int, name: String, tasks: Int, runMs: Long,
                   gcMs: Long, inRec: Long, shRead: Long, shWrite: Long)
@@ -59,8 +36,7 @@ object Prof {
     if (warmDir.isDirectory && !sys.env.contains("SPARK_GRAFT_NOWARMUP"))
       try fn(spark, warmDir.getPath).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => System.err.println(s"[prof-warm] ${e.getMessage}") }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    Session.reset(spark)
     stages.clear()
     // process CPU time (user+sys, actual on-CPU cycles) is immune to the
     // hypervisor-steal / ambient-contention noise that inflates both wall

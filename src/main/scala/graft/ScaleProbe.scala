@@ -52,7 +52,7 @@ object ScaleProbe {
   }
 
   private def time(label: String)(f: => Long): (String, Double, Long) = {
-    // loadavg on both sides of the timed section (the Bench convention):
+    // loadavg on both sides of the timed section:
     // solo-probe rows are only comparable within a load window — the r15
     // re-measurement of the r14 ivf/ivfpq rows moved ×2.5–3 on window
     // alone, so every published row needs its window recorded
@@ -67,7 +67,7 @@ object ScaleProbe {
     (label, dt, rows)
   }
 
-  /** Same between-measurement hygiene as Bench: drop cached relations and
+  /** Between-measurement hygiene ([[Session.reset]]): drop cached relations and
     * operator-pinned persisted RDDs so a timing can't reuse a previous
     * timing's materialization (e.g. cc_canonical re-deriving the simhash
     * signature that simhash_pairs just persisted via CacheManager plan
@@ -79,12 +79,9 @@ object ScaleProbe {
     * GC, and at 48 GiB ParallelGC barely ever runs — so the 1× legs (where
     * AQE broadcasts nearly every join) quietly fill storage memory and a
     * 4-op probe run measured its own control op 3× slower than the same op
-    * probed alone (minhash_lsh 79.3 s vs 26.1 s at 100×, round 9). Same
-    * fix as Bench.scala's untimed gap. */
+    * probed alone (minhash_lsh 79.3 s vs 26.1 s at 100×, round 9). */
   private def flush(spark: SparkSession, keep: Seq[DataFrame]): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    org.apache.spark.graft.BlockHygiene.destroyBroadcasts(spark.sparkContext)
+    Session.reset(spark)
     System.gc()
     keep.foreach { df => df.cache(); df.count() }
   }
@@ -92,44 +89,10 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val dir = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // typed-Aggregator groups (BoundedTopK*/BoundedCollect/ModalAgg) keep
-      // BOUNDED buffers, so the ObjectHashAggregate 128-distinct-key sort
-      // fallback only re-introduces the corpus-wide sort the aggregators
-      // exist to avoid (measured: brute hardNegatives 44.4 s -> 13.8 s at
-      // 100x when the map stays hash). 64k keys x k-pair buffers is MBs.
-      // BLAST RADIUS (session-wide, ADVICE r16): this raises the
-      // ObjectHashAggregate sort-fallback for EVERY typed aggregate in the
-      // session, not just the bounded BoundedTopK*/ModalAgg buffers it
-      // exists for. A future aggregator with UNBOUNDED per-group state
-      // (collect_list/percentile-style) over >64k groups per partition
-      // would lose the 128-key memory safety valve — keep new typed
-      // aggregates k-bounded, or scope this per-query via withSQLConf.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // Cached-plan compilation honors AQE (r20): by default
-      // canChangeCachedPlanOutputPartitioning=false compiles every
-      // persisted relation WITHOUT adaptive coalescing, so caches fill at
-      // the raw shuffle width (32 one-row-ish partitions at sf0.1) and
-      // every downstream cache scan pays 32 micro-tasks; with it on, the
-      // cache keeps AQE's size-derived partitioning — the same adaptivity
-      // the rest of the plan already gets, at any scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Serialized shuffle writer - one output file per map task, the
-      // at-scale write path; see Bench.scala for the measured rationale (r20)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // Registry-sized codegen cache - the 100-entry default thrashes
-      // inside iterative queries; see Bench.scala for the rationale (r20)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // Same untimed JIT/codegen warm-up as Bench: without it the first probe
+    // Untimed JIT/codegen warm-up: without it the first probe
     // (cc_canonical, post-filter) absorbs the whole cold-start.
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 

@@ -1,52 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Some driver generations of events.parquet carry INT64
-      // TIMESTAMP(NANOS); set at build time so any code path (not just
-      // Tables.events) can read them. Harmless for µs lineage. See Tables.scala.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // typed-Aggregator groups (BoundedTopK*/BoundedCollect/ModalAgg) keep
-      // BOUNDED buffers, so the ObjectHashAggregate 128-distinct-key sort
-      // fallback only re-introduces the corpus-wide sort the aggregators
-      // exist to avoid (measured: brute hardNegatives 44.4 s -> 13.8 s at
-      // 100x when the map stays hash). 64k keys x k-pair buffers is MBs.
-      // BLAST RADIUS (session-wide, ADVICE r16): this raises the
-      // ObjectHashAggregate sort-fallback for EVERY typed aggregate in the
-      // session, not just the bounded BoundedTopK*/ModalAgg buffers it
-      // exists for. A future aggregator with UNBOUNDED per-group state
-      // (collect_list/percentile-style) over >64k groups per partition
-      // would lose the 128-key memory safety valve — keep new typed
-      // aggregates k-bounded, or scope this per-query via withSQLConf.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // Cached-plan compilation honors AQE (r20): by default
-      // canChangeCachedPlanOutputPartitioning=false compiles every
-      // persisted relation WITHOUT adaptive coalescing, so caches fill at
-      // the raw shuffle width (32 one-row-ish partitions at sf0.1) and
-      // every downstream cache scan pays 32 micro-tasks; with it on, the
-      // cache keeps AQE's size-derived partitioning — the same adaptivity
-      // the rest of the plan already gets, at any scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Serialized shuffle writer - one output file per map task, the
-      // at-scale write path; see Bench.scala for the measured rationale (r20)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // Registry-sized codegen cache - the 100-entry default thrashes
-      // inside iterative queries; see Bench.scala for the rationale (r20)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Same targeted-iteration filter as Bench: comma-separated query names.
+    // Optional targeted-iteration filter: comma-separated query names.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
@@ -58,18 +20,9 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         }
-        // Same per-query hygiene as Bench: operators persist/localCheckpoint
-        // intermediates (Dedup signatures, the CC loop's checkpoints); without
-        // an explicit RDD-level unpersist those blocks accumulate across all
-        // 60+ queries of a verify run, and broadcast blocks are reaped by
-        // neither call (only ContextCleaner after driver GC — see
-        // BlockHygiene). Cost: the blocking unpersist + broadcast destroy add
-        // a few ms per query (~1-2 s over a full 68-query verify run) —
-        // honest per-query isolation is worth that; correctness output is
-        // unaffected either way.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        org.apache.spark.graft.BlockHygiene.destroyBroadcasts(spark.sparkContext)
+        // Per-query hygiene. Cost: a few ms per query (~1-2 s over a full
+        // verify run); correctness output is unaffected either way.
+        Session.reset(spark)
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

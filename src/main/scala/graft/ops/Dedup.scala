@@ -1026,10 +1026,6 @@ object Dedup {
       converged = sums.sliding(2).exists(w => w.head == w.last)
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-debug] round $iter sums=${sums.mkString(",")} " +
-          s"converged=$converged" +
-          s" cumJobs=${sess.sparkContext.statusTracker.getJobIdsForGroup(null).length}")
     }
     labels
     } finally {
@@ -1181,11 +1177,8 @@ object Dedup {
     * no sound point to unpersist (the caller may execute the plan any
     * number of times). Long-lived library sessions that interleave many
     * dedup calls should bound MemoryStore pressure between pipelines via
-    * `spark.catalog.clearCache()` +
-    * `sparkContext.getPersistentRDDs.values.foreach(_.unpersist())` —
-    * exactly what Bench/ScaleProbe's hygiene gap does. MEMORY_AND_DISK (not
-    * MEMORY_ONLY) keeps eviction from silently re-running the signature
-    * build mid-plan. */
+    * [[graft.Session.reset]]. MEMORY_AND_DISK (not MEMORY_ONLY) keeps
+    * eviction from silently re-running the signature build mid-plan. */
   private def contractSignatures(sig: DataFrame, sigColNames: Seq[String])
       : (DataFrame, DataFrame) = {
     val sigCols = sigColNames.map(col)

@@ -803,7 +803,7 @@ object TextStats {
     * DISK_ONLY per the hashed-TF lesson (memory-resident corpus persists
     * degrade 2×+ under ambient pressure). Lifetime is owned by the
     * caller's action, the registry convention for lazily-returned
-    * operators (Bench drops operator persists between queries). */
+    * operators (Session.reset drops operator persists between queries). */
   def ngramLmPerplexity(docs: DataFrame, maxAvgBitsX100: Int = 1200,
                         textCol: String = "text"): DataFrame = {
     val t = col("__t")

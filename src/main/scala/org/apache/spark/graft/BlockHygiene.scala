@@ -4,8 +4,8 @@
  * `BlockManagerMaster` are `private[spark]`: Scala qualified-private grants
  * access to any code inside the `org.apache.spark` package tree. This is the
  * standard technique test harnesses use to reach Spark internals without
- * forking them; nothing here is on any query path — it exists so Bench/Verify
- * can make each timed query start from a clean MemoryStore.
+ * forking them; nothing here is on any query path — it exists so
+ * `graft.Session.reset` can start each query from a clean MemoryStore.
  *
  * Why it is needed at all: `spark.catalog.clearCache()` clears cached
  * *relations* and `rdd.unpersist(blocking = true)` clears *persisted RDD*
@@ -32,7 +32,7 @@ object BlockHygiene {
       .distinct
 
   /** Synchronously destroy every broadcast's blocks. Safe between queries:
-    * each bench/verify query builds a fresh plan, so no broadcast handle is
+    * each query builds a fresh plan, so no broadcast handle is
     * ever re-read after its gap. Returns the number of broadcasts removed.
     *
     * Best-effort per id: the ids are a SNAPSHOT, and the ContextCleaner
@@ -50,12 +50,6 @@ object BlockHygiene {
     }
     ids.length
   }
-
-  /** Storage-memory bytes currently used across all block managers
-    * (max - remaining, summed) — the per-gap observability signal. */
-  def storageMemoryUsed(sc: SparkContext): Long =
-    sc.env.blockManager.master.getMemoryStatus.values
-      .map { case (max, remaining) => max - remaining }.sum
 
   /** Block until every queued listener event has been delivered — the
     * race-free way for a spec to assert "no job was launched" (the bus is

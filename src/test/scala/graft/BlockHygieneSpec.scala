@@ -4,9 +4,9 @@ import org.apache.spark.graft.BlockHygiene
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench/verify contagion fix, tested directly: broadcast blocks
-  * survive both `catalog.clearCache()` and RDD-level unpersist (they are
-  * only reaped by ContextCleaner after driver GC), and
+/** The cross-query contagion fix behind `Session.reset`, tested directly:
+  * broadcast blocks survive both `catalog.clearCache()` and RDD-level
+  * unpersist (they are only reaped by ContextCleaner after driver GC), and
   * `BlockHygiene.destroyBroadcasts` removes them synchronously. This is
   * the mechanism behind BENCH_r06's 39 s t_hashed_tf_neardup inflation —
   * see BASELINE.md's round-7 post-mortem. */
@@ -26,7 +26,7 @@ class BlockHygieneSpec extends AnyFunSuite with SparkFixture {
     assert(BlockHygiene.broadcastIds(sc).nonEmpty,
       "the broadcast join should have left broadcast blocks in the block manager")
 
-    // The two cleanup calls Bench used before round 7 do NOT remove them...
+    // The two cleanup calls the query loop used before round 7 do NOT remove them...
     spark.catalog.clearCache()
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     assert(BlockHygiene.broadcastIds(sc).nonEmpty,

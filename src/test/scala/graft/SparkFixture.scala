@@ -2,31 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole suite (JVM-forked by sbt). */
+/** One shared local session for the whole suite (JVM-forked by sbt), under
+  * the engine's own [[Session]] policy. */
 object SparkTest {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // typed-Aggregator groups (BoundedTopK*/BoundedCollect/ModalAgg) keep
-      // BOUNDED buffers, so the ObjectHashAggregate 128-distinct-key sort
-      // fallback only re-introduces the corpus-wide sort the aggregators
-      // exist to avoid (measured: brute hardNegatives 44.4 s -> 13.8 s at
-      // 100x when the map stays hash). 64k keys x k-pair buffers is MBs.
-      // BLAST RADIUS (session-wide, ADVICE r16): this raises the
-      // ObjectHashAggregate sort-fallback for EVERY typed aggregate in the
-      // session, not just the bounded BoundedTopK*/ModalAgg buffers it
-      // exists for. A future aggregator with UNBOUNDED per-group state
-      // (collect_list/percentile-style) over >64k groups per partition
-      // would lose the 128-key memory safety valve — keep new typed
-      // aggregates k-bounded, or scope this per-query via withSQLConf.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
