@@ -1327,8 +1327,8 @@ object Dedup {
     * never shingles or bands a duplicate-saturated corpus), minhash edges
     * over the SURVIVORS only, transitive closure, then every original doc
     * routed through its exact canonical to the cluster canonical. Ships as
-    * the `dd_pipeline_canonical` query; probed at 100× against standalone
-    * clustering in ScaleProbe (`pipeline_canonical` vs `cluster_minhash`).
+    * the `dd_pipeline_canonical` query (standalone clustering:
+    * `dd_cluster_minhash`).
     *
     * Output: (doc_id, canonical_id, is_canonical) over every input doc. */
   def pipelineCanonical(docs: DataFrame, threshold: Double = 0.5,

@@ -924,16 +924,6 @@ object EmbeddingSim {
       .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
   }
 
-  /** [[hierCellsFrom]] over freshly derived geometry — the standalone
-    * hier-assignment relation the `ivfpq_hier_assign` decomposition probe
-    * times in isolation (BASELINE.md's r15 attribution-gap item). */
-  def hierCells(vectors: DataFrame, fineK: Int = 16,
-                coarseK: Int = 4): DataFrame = {
-    val corpus = prepared(vectors)
-    val (coarse, fineT) = hierCentroids(corpus, fineK, coarseK)
-    hierCellsFrom(corpus, coarse, fineT)
-  }
-
   /** [[ivfCandidates]]' HIERARCHICAL twin — the candidate seam at n·2√K
     * assignment cost: corpus cells from [[hierCellsFrom]], query probes
     * ranking `pcoarse` nearest groups then `nprobe` fine cells among
@@ -944,7 +934,7 @@ object EmbeddingSim {
     * scoring) swaps retrievers without code changes — this is the
     * configuration that deletes the flat n·K assignment term the flat
     * seam inherits once K grows ∝ corpus (100× probe: flat-fed
-    * hardNegatives 32.6 s, hier-fed in the ivf_topk_hier class). */
+    * hardNegatives 32.6 s, hier-fed in the hierarchical IVF top-k class). */
   def hierCandidates(vectors: DataFrame, queryPred: Column,
                      fineK: Int = 16, coarseK: Int = 4,
                      pcoarse: Int = 2, nprobe: Int = 2): DataFrame = {
