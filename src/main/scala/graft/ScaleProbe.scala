@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,33 +60,58 @@ object ScaleProbe {
   private def replicateEvents(ev: DataFrame, n: Int): DataFrame =
     replicate(ev, n, Seq("event_id", "user_id"))((d, _) => d)
 
+  /** Written last by [[writeCorpus]]: the factor, the source directory and
+    * every source table's footer row count, one per line. */
+  private val Marker = "_CORPUS"
+
+  private def stamp(spark: SparkSession, srcDir: String, factor: Int): String =
+    (Seq(s"factor $factor", s"source ${new java.io.File(srcDir).getAbsolutePath}") ++
+      (replicated ++ unchanged).map(t =>
+        s"$t ${Tables.parquetRowCount(spark, s"$srcDir/$t.parquet")}")).mkString("", "\n", "\n")
+
+  /** Row counts of the replicated tables under `dir`, and whether an
+    * existing corpus was reused. */
+  case class Corpus(rows: Map[String, Long], reused: Boolean)
+
   /** Writes `srcDir` replicated `factor`× as an sf-shaped directory at
     * `outDir`: the [[replicated]] tables as multi-file parquet directories
     * (so footer-sized plans such as `emb_neardup_auto` see N× row counts),
-    * the [[unchanged]] ones copied. Always rewritten: an exists() guard
-    * would reuse the partial output of a crashed run or stale data from a
-    * regenerated corpus. Returns the replicated tables' row counts. */
+    * the [[unchanged]] ones copied, then the [[Marker]]. An existing
+    * `outDir` is reused only when its marker matches this factor, source
+    * and source row counts: a crashed run leaves no marker and a
+    * regenerated source other counts, so neither is ever reused. */
   def writeCorpus(spark: SparkSession, srcDir: String, outDir: String,
-                  factor: Int): Map[String, Long] = {
+                  factor: Int): Corpus = {
     val conf = spark.sessionState.newHadoopConf()
     val out = new Path(outDir)
     val fs = out.getFileSystem(conf)
-    fs.delete(out, true)
-    // raw events, not Tables.events: the written table keeps the source's
-    // ts lineage, and Tables.events normalizes it on read like any sf dir
-    val sources = Seq(
-      replicateDocs(Tables.documents(spark, srcDir), factor),
-      replicateVecs(Tables.embeddings(spark, srcDir), factor),
-      replicateEvents(Tables.table(spark, srcDir, "events"), factor))
-    replicated.zip(sources).foreach { case (t, df) =>
-      df.write.parquet(s"$outDir/$t.parquet")
+    val marker = new Path(out, Marker)
+    val want = stamp(spark, srcDir, factor)
+    val reused = fs.exists(marker) && {
+      val in = fs.open(marker)
+      try new String(in.readAllBytes(), UTF_8) == want finally in.close()
     }
-    unchanged.foreach { t =>
-      val src = new Path(s"$srcDir/$t.parquet")
-      FileUtil.copy(src.getFileSystem(conf), src, fs,
-        new Path(s"$outDir/$t.parquet"), false, conf)
+    if (!reused) {
+      fs.delete(out, true)
+      // raw events, not Tables.events: the written table keeps the source's
+      // ts lineage, and Tables.events normalizes it on read like any sf dir
+      val sources = Seq(
+        replicateDocs(Tables.documents(spark, srcDir), factor),
+        replicateVecs(Tables.embeddings(spark, srcDir), factor),
+        replicateEvents(Tables.table(spark, srcDir, "events"), factor))
+      replicated.zip(sources).foreach { case (t, df) =>
+        df.write.parquet(s"$outDir/$t.parquet")
+      }
+      unchanged.foreach { t =>
+        val src = new Path(s"$srcDir/$t.parquet")
+        FileUtil.copy(src.getFileSystem(conf), src, fs,
+          new Path(s"$outDir/$t.parquet"), false, conf)
+      }
+      val os = fs.create(marker, false)
+      try os.write(want.getBytes(UTF_8)) finally os.close()
     }
-    replicated.map(t => t -> Tables.parquetRowCount(spark, s"$outDir/$t.parquet")).toMap
+    Corpus(replicated.map(t => t -> Tables.parquetRowCount(spark, s"$outDir/$t.parquet")).toMap,
+      reused)
   }
 
   private def loadavg: Double =
@@ -102,9 +129,9 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("ERROR")
 
     val t0 = System.nanoTime()
-    val rows = writeCorpus(spark, srcDir, outDir, factor)
-    println(f"corpus: $outDir ${replicated.map(t => s"$t ${rows(t)}").mkString(", ")} " +
-      f"written in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val corpus = writeCorpus(spark, srcDir, outDir, factor)
+    println(f"corpus: $outDir ${replicated.map(t => s"$t ${corpus.rows(t)}").mkString(", ")} " +
+      f"${if (corpus.reused) "reused" else "written"} in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     Session.reset(spark)
 
     def mb(b: Long): Double = b / 1048576.0

@@ -21,9 +21,12 @@ object DayStats {
       metrics.map(m => avg(col(m)).as(s"avg_$m")): _*)
 
   /** A8: distinct days with observations, ascending. `to_date` keys (not
-    * formatted strings) so date-partition pruning stays possible. */
+    * formatted strings) so date-partition pruning stays possible. One row
+    * per observed day, so the result is sorted in one partition: a global
+    * `orderBy` would add a range-partition sampling job and an exchange. */
   def distinctDays(obs: DataFrame): DataFrame =
-    obs.select(to_date(col("event_timestamp")).as("day")).distinct().orderBy(col("day"))
+    obs.select(to_date(col("event_timestamp")).as("day")).distinct()
+      .coalesce(1).sortWithinPartitions(col("day"))
 
   /** A10: min/max/avg/exact-median of a metric per group. */
   def statsPack(obs: DataFrame, groupKeys: Seq[String], metric: String): DataFrame =

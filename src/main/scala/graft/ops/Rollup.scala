@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.ModalAgg
 
 /** Time-bucketed rollups + modal-code aggregation (SURVEY.md §2.4 A2-A6, J1,
   * W2-W3), as ONE parameterized implementation — the reference duplicates this
@@ -11,15 +14,21 @@ import org.apache.spark.sql.functions._
   *
   * Modal code: the reference computes `groupBy(key, code).count()` then ranks
   * with `row_number() over (partitionBy key orderBy count desc, code
-  * asc_nulls_last) == 1` and left-joins back (spark.py:620-645 et al.) — a
-  * 3-shuffle plan. `modalCode` here collapses the rank+join into a single
-  * `min_by` hash aggregate with the SAME deterministic tie-break
-  * (count desc, code asc): 2 shuffles, map-side combinable, no sort, no join.
-  * The literal rank formulation is kept as `modalCodeRanked` for parity tests.
+  * asc_nulls_last) == 1` and left-joins the rank-1 row back onto the metric
+  * aggregate (spark.py:620-645 et al.). Here the modal code is one more
+  * aggregate function (`functions.ModalAgg`, same tie-break, nulls last) in
+  * the rollup's single `groupBy(key)`: each rollup scans its input once,
+  * shuffles once, and plans no join and no broadcast. The literal rank
+  * formulation is kept as `modalCodeRanked` for parity tests.
   *
-  * Scale notes: groupBy on (bucket, code) then (bucket) partial-aggregates
-  * before both shuffles, so 100 TB in ≈ |buckets × codes| rows shuffled.
-  * No global windows on the rollup path. The count-based bucketing (A4) is
+  * A rollup has at most one row per bucket (24 hours, a few days, a few
+  * count buckets), so the result is sorted in one partition
+  * (`coalesce(1).sortWithinPartitions`) instead of by a global `orderBy`,
+  * which would add a range-partition sampling job and an exchange.
+  *
+  * Scale notes: the `groupBy(key)` partial-aggregates before its shuffle, so
+  * 100 TB in ≈ |buckets| partial rows per input partition shuffled. No global
+  * windows on the time-keyed paths. The count-based bucketing (A4) is
   * inherently a global ordering — the reference bounds it with a preceding
   * `limit(hours*12)` (spark.py:817,1167); we keep that bound mandatory.
   */
@@ -38,16 +47,31 @@ object Rollup {
     avgCols.map(c => avg(col(c)).as(s"avg_$c")) ++
     pinnedCols.map(c => min(col(c)).as(s"first_$c"))
 
-  /** Modal value of `code` per `key`, deterministic ties (count desc, code
-    * asc). Single-pass shape: two hash aggregates, zero windows/joins. */
+  private val modalStrings = udaf(ModalAgg.strings)
+  private val modalLongs = udaf(ModalAgg.longs, Encoders.LONG)
+
+  /** The `(modal_code, modal_count)` struct aggregate of `code` in `df`,
+    * deterministic ties (count desc, code asc, nulls last), as columns
+    * (named `__modal`) to add to a `groupBy` and the projection that
+    * unpacks it. Integral codes are counted as longs and cast back. */
+  private def modal(df: DataFrame, code: Column): (Column, Seq[Column]) = {
+    val t = df.select(code).schema.head.dataType
+    val agg = t match {
+      case StringType => modalStrings(code)
+      case ByteType | ShortType | IntegerType | LongType => modalLongs(code.cast(LongType))
+      case _ => throw new IllegalArgumentException(
+        s"modal code must be a string or integral column, got ${t.simpleString}")
+    }
+    (agg.as("__modal"), Seq(col("__modal.modal_code").cast(t).as("modal_code"),
+      col("__modal.modal_count").as("modal_count")))
+  }
+
+  /** Modal value of `code` per `key`: one `groupBy(key)` aggregate. */
   def modalCode(df: DataFrame, key: Column, keyName: String,
-                code: Column = col("code")): DataFrame =
-    df.groupBy(key.as(keyName), code.as("__code"))
-      .agg(count(lit(1)).as("__cnt"))
-      .groupBy(col(keyName))
-      .agg(
-        min_by(col("__code"), struct((-col("__cnt")).as("n"), col("__code"))).as("modal_code"),
-        max(col("__cnt")).as("modal_count"))
+                code: Column = col("code")): DataFrame = {
+    val (agg, out) = modal(df, code)
+    df.groupBy(key.as(keyName)).agg(agg).select(col(keyName) +: out: _*)
+  }
 
   /** The reference's literal 3-step modal plan (A5+A6): freq → rank-1.
     * Kept for parity/property tests against `modalCode`. */
@@ -61,16 +85,16 @@ object Rollup {
       .select(col(keyName), col("__code").as("modal_code"), col("__cnt").as("modal_count"))
   }
 
-  /** A2/A3 generic rollup: metrics aggregated per bucket key, left-joined
-    * with the modal code (J1 — tiny right side, Catalyst auto-broadcasts). */
+  /** A2/A3 generic rollup: metrics and the modal code aggregated per bucket
+    * key in one aggregate, sorted by key in one partition (bounded output). */
   def rollup(obs: DataFrame, key: Column, keyName: String,
              avgCols: Seq[String], pinnedCols: Seq[String] = Nil,
              code: Column = col("code")): DataFrame = {
-    val aggs = aggList(avgCols, pinnedCols)
-    val aggregated = obs.groupBy(key.as(keyName)).agg(aggs.head, aggs.tail: _*)
-    aggregated
-      .join(modalCode(obs, key, keyName, code), Seq(keyName), "left")
-      .orderBy(col(keyName))
+    val (modalAgg, modalOut) = modal(obs, code)
+    val aggs = aggList(avgCols, pinnedCols) :+ modalAgg
+    obs.groupBy(key.as(keyName)).agg(aggs.head, aggs.tail: _*)
+      .select(col("*") +: modalOut: _*).drop("__modal")
+      .coalesce(1).sortWithinPartitions(col(keyName))
   }
 
   /** Hourly rollup (A2): bucket by hour-of-day of the event time. */

@@ -123,24 +123,18 @@ object Weather {
             col("modal_code"), col("modal_count"))
     },
 
-    // A5/A6 single-shuffle variant — modal code via the typed ModalAgg
-    // Aggregator (map-side Map buffer, ONE shuffle; same deterministic
-    // tie-break, same oracle as the two-aggregation plan).
+    // A5/A6 alone — the modal code per hour through the typed ModalAgg
+    // Aggregator that every Rollup folds into its one aggregate (map-side
+    // buffer, one shuffle, count desc / code asc / nulls last).
     QuerySpec.sql("hourly_modal_udaf",
       """SELECT hour, event_type AS modal_code, cnt AS modal_count FROM (
         |  SELECT CAST(hour(ts) AS INT) AS hour, event_type, count(*) AS cnt,
         |         row_number() OVER (PARTITION BY CAST(hour(ts) AS INT)
         |           ORDER BY count(*) DESC, event_type ASC) AS rn
         |  FROM events GROUP BY 1, 2) WHERE rn = 1 ORDER BY hour""") {
-      (s, dir) => {
-        val modal = udaf(graft.functions.ModalAgg)
-        obs(s, dir)
-          .groupBy(hour(col("event_timestamp")).as("hour"))
-          .agg(modal(col("code")).as("m"))
-          .select(col("hour"), col("m.modal_code").as("modal_code"),
-            col("m.modal_count").as("modal_count"))
+      (s, dir) =>
+        Rollup.modalCode(obs(s, dir), hour(col("event_timestamp")), "hour")
           .orderBy(col("hour"))
-      }
     },
 
     // A3 — daily rollup (GET /weather/recent_with_step 7d branch).

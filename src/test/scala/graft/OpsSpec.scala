@@ -96,14 +96,23 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
 
   test("modalCode matches modalCodeRanked including deterministic ties") {
     // code 1 and 2 both appear twice for k=1 → tie broken by code asc.
-    val df = Seq((1, "1"), (1, "1"), (1, "2"), (1, "2"), (1, "3"),
-      (2, "9"), (2, "9"), (2, "5")).toDF("k", "code")
+    // A null code counts as a code and sorts last: k=3 ties null with "a"
+    // (→ "a"), k=4 has null as its most frequent code (→ null, 2).
+    val df = Seq[(Int, String)]((1, "1"), (1, "1"), (1, "2"), (1, "2"), (1, "3"),
+      (2, "9"), (2, "9"), (2, "5"),
+      (3, null), (3, null), (3, "a"), (3, "a"),
+      (4, null), (4, null), (4, "b")).toDF("k", "code")
     val a = Rollup.modalCode(df, col("k"), "k").orderBy("k").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     val b = Rollup.modalCodeRanked(df, col("k"), "k").orderBy("k").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     assert(a === b)
-    assert(a === Seq((1, "1", 2L), (2, "9", 2L)))
+    assert(a === Seq((1, "1", 2L), (2, "9", 2L), (3, "a", 2L), (4, null, 2L)))
+    // the rollup carries the same modal code as its own aggregate
+    val rolled = Rollup.rollup(df.withColumn("event_timestamp", current_timestamp()),
+        col("k"), "k", avgCols = Nil).collect()
+      .map(r => (r.getAs[Int]("k"), r.getAs[String]("modal_code"), r.getAs[Long]("modal_count"))).toSeq
+    assert(rolled === a)
   }
 
   test("asof join matches the most recent right row at or before each left ts") {

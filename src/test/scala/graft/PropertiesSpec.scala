@@ -37,8 +37,14 @@ class PropertiesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("single-pass modalCode always equals the reference's ranked formulation") {
-    samples(rowsGen, 4).foreach { rows =>
-      val df = rows.map { case (k, o, _) => (k, (o % 5).toString) }.toDF("k", "code")
+    // few rows per key over {null, "0", "1", "2"}: ties between a null and
+    // a code at the top count are common, so nulls-last is exercised
+    val modalGen = Gen.nonEmptyListOf(for {
+      k <- Gen.oneOf("a", "b", "c", "d", "e", "f")
+      c <- Gen.oneOf(null, "0", "1", "2")
+    } yield (k, c))
+    samples(modalGen, 6).foreach { rows =>
+      val df = rows.toDF("k", "code")
       val a = Rollup.modalCode(df, col("k"), "k").orderBy("k").collect().toSeq
       val b = Rollup.modalCodeRanked(df, col("k"), "k").orderBy("k").collect().toSeq
       assert(a === b)

@@ -57,6 +57,29 @@ class ScaleProbeSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("a complete corpus with a matching marker is reused, not rewritten") {
+    val file = new java.io.File(s"$out/events.parquet").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val mtime = file.lastModified()
+    val again = ScaleProbe.writeCorpus(spark, src, out, 2)
+    assert(again.reused)
+    assert(file.exists() && file.lastModified() == mtime)
+    assert(again.rows("events") == 2 * Tables.parquetRowCount(spark, s"$src/events.parquet"))
+  }
+
+  test("a missing or mismatched marker makes the corpus be rewritten") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scaleprobe").resolve("x").toString
+    val n = Tables.parquetRowCount(spark, s"$src/events.parquet")
+    assert(!ScaleProbe.writeCorpus(spark, src, dir, 2).reused)
+    // another factor over the same directory: the marker names factor 2
+    val three = ScaleProbe.writeCorpus(spark, src, dir, 3)
+    assert(!three.reused && three.rows("events") == 3 * n)
+    // a crash before the marker was written leaves none
+    assert(new java.io.File(dir, "_CORPUS").delete())
+    assert(!ScaleProbe.writeCorpus(spark, src, dir, 3).reused)
+    assert(ScaleProbe.writeCorpus(spark, src, dir, 3).reused)
+  }
+
   test("unknown query names are rejected with the registry listed") {
     val e = intercept[IllegalArgumentException](
       Prof.requireKnown(Seq("dd_minhash_lsh", "dd_minhash_lhs")))
