@@ -46,6 +46,22 @@ object Prof {
     def clear(): Unit = synchronized { stages.clear(); jobs = 0 }
   }
 
+  /** Jobs started while `body` runs, counted by the listener [[measure]]
+    * uses. The listener bus is drained before the listener attaches and
+    * after `body`, so no earlier job leaks in and no job of `body` is
+    * missed. */
+  def jobsDuring(spark: SparkSession)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val log = new StageLog
+    BlockHygiene.drainListenerBus(sc)
+    sc.addSparkListener(log)
+    try {
+      body
+      BlockHygiene.drainListenerBus(sc)
+      log.synchronized(log.jobs)
+    } finally sc.removeSparkListener(log)
+  }
+
   /** Fails, listing every registry name, unless each of `names` is a
     * registry query — called before any session or corpus work. */
   def requireKnown(names: Seq[String]): Unit = {

@@ -83,6 +83,38 @@ object Session {
     b
   }
 
+  /** Runs `body` with the SQL confs `kvs` set on `spark`, then restores
+    * each key's previous value, on a throw too; a key that was unset
+    * before is unset again. The planner reads these confs when it plans,
+    * so every action that must run under them (a checkpoint, a drained
+    * stream) has to finish inside `body`. */
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val set = spark.conf.getAll // the explicitly set keys only
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs `body` with AQE off, for a chain of small exchanges that should
+    * run as one job rather than one job per exchange plus a replan. */
+  def nonAdaptive[A](spark: SparkSession)(body: => A): A =
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false")(body)
+
+  /** The non-adaptive loop regime of the iterative operators (connected
+    * components, PageRank, k-means, BPE, unigram EM, the perceptron):
+    * AQE off, and `parts` shuffle partitions, never fewer than 2. Under
+    * AQE every exchange of a round is its own job plus a replan; with it
+    * off a round runs as one job. Each caller sizes `parts` from data it
+    * has already measured, and forces any corpus-shaped input before the
+    * regime starts, so that work still plans adaptively. */
+  def loopRegime[A](spark: SparkSession, parts: Int)(body: => A): A =
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> math.max(parts, 2).toString)(body)
+
   /** Between-query cleanup, so no query inherits another's blocks:
     * 1. cached relations + persisted/localCheckpointed RDD blocks (Dedup
     *    signatures, the CC loop's checkpoints): clearCache + BLOCKING

@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   *  - location = coalesce(payload.location_name, key)            (spark.py:192-194)
   *  - event_timestamp: multi-format fallback chain → kafka ts    (spark.py:203-217)
   *  - 13 typed metric projections out of the map                 (spark.py:219-247)
-  *  - error rows dropped (nonempty error_message / "lỗi" marker) (spark.py:249-251,
-  *    getSample.py:141-147)
+  *  - error rows dropped: nonempty error_message               (spark.py:249-251)
+  *    (every "lỗi khi gọi api" marker row has one, getSample.py:141-147)
   *
   * Everything is a stock Catalyst expression — `from_json`, `coalesce`,
   * `to_timestamp`, casts — so predicate pushdown / column pruning / codegen all
@@ -162,11 +162,6 @@ object Parse {
   /** P6: drop rows with a nonempty error marker; null-safe (spark.py:249-251). */
   def dropErrorRows(df: DataFrame): DataFrame =
     df.filter(coalesce(length(trim(col("error_message"))), lit(0)) === 0)
-
-  /** P7: drop payloads whose message contains the crawler's API-error marker,
-    * case-insensitively (getSample.py:141-147). */
-  def dropApiErrorRows(df: DataFrame, marker: String = "lỗi khi gọi api"): DataFrame =
-    df.filter(!lower(coalesce(col("error_message"), lit(""))).contains(lit(marker)))
 
   /** P12: keep analyzable rows only. */
   def analyzable(df: DataFrame): DataFrame =

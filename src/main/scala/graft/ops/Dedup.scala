@@ -936,15 +936,11 @@ object Dedup {
     // and each round executes as ONE job whose stages are the label
     // exchanges. At 100 TB the same logic holds: the loop's relations are
     // O(|pairs|), not corpus-sized, and their partitioning should track the
-    // measured pair volume, not the session-wide corpus setting. Confs are
-    // restored in the finally; the returned labels are a checkpoint leaf,
+    // measured pair volume, not the session-wide corpus setting. The
+    // regime ends with the loop; the returned labels are a checkpoint leaf,
     // so downstream consumers re-plan under the session's own regime.
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(p.rdd.getNumPartitions, 2)
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    graft.Session.loopRegime(sess, p.rdd.getNumPartitions) {
+    val loopParts = Checkpoints.shufflePartitions(sess)
     val edges = p
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(p.select(col("doc_b").as("u"), col("doc_a").as("v")))
@@ -1028,9 +1024,6 @@ object Dedup {
       iter += 1
     }
     labels
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 
@@ -1437,21 +1430,19 @@ object Dedup {
     * time only ×1.16: pure job-gap). AQE has nothing to offer here —
     * both aggregates collapse to a handful of rows, and the join picks
     * the same shuffled plan either way (the component side's stats are
-    * reset by the loop's checkpoints). Session confs are restored in the
-    * finally; the histogram itself is a few-dozen-row leaf, so the eager
-    * materialization is free and downstream consumers replay no work. */
-  def clusterSizeHistogram(docs: DataFrame, components: DataFrame): DataFrame = {
-    val sess = docs.sparkSession
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try Checkpoints.materialized(
-      canonicalizeFrom(docs, components)
-        .groupBy(col("canonical_id")).agg(count(lit(1)).as("cluster_size"))
-        .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
-        .select(col("cluster_size"), col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).as("n_docs")))
-    finally sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
+    * reset by the loop's checkpoints). AQE is off only for this one
+    * materialization; the histogram itself is a few-dozen-row leaf, so the
+    * eager materialization is free and downstream consumers replay no
+    * work. */
+  def clusterSizeHistogram(docs: DataFrame, components: DataFrame): DataFrame =
+    graft.Session.nonAdaptive(docs.sparkSession) {
+      Checkpoints.materialized(
+        canonicalizeFrom(docs, components)
+          .groupBy(col("canonical_id")).agg(count(lit(1)).as("cluster_size"))
+          .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
+          .select(col("cluster_size"), col("n_clusters"),
+            (col("cluster_size") * col("n_clusters")).as("n_docs")))
+    }
 
   /** Keep-POLICY selection over near-dup clusters: where
     * [[canonicalizeFrom]] keeps the min-id member (an arbitrary but stable
@@ -1561,19 +1552,13 @@ object Dedup {
     // node/edge-sized loop relations. The edge cache is FORCED first, so
     // the upstream pair GENERATION (corpus-shaped, where AQE's skew/size
     // adaptivity belongs) still runs adaptively — only the loop doesn't.
-    val sess = pairs.sparkSession
     // pin the loop's shuffle width from the MEASURED edge count (the
     // connectedComponents sizing idea; rdd.getNumPartitions would read
     // the union's concatenated pre-execution estimate): ~1M edges per
     // loop partition, floor 2 — non-adaptive stages at the session width
     // would run 32 micro-tasks per node-sized aggregate.
     val edgeRows = e.count()
-    val loopParts = math.max((edgeRows / 1000000L).toInt + 1, 2)
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    graft.Session.loopRegime(pairs.sparkSession, (edgeRows / 1000000L).toInt + 1) {
       for (_ <- 1 to iters) {
         val contrib = ranks
           .join(deg, ranks("doc_id") === deg("u"))
@@ -1584,9 +1569,6 @@ object Dedup {
             .agg(sum(col("c")).as("s"))
             .select(col("v").as("doc_id"), newRank.as("rank_ppm")))
       }
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     ranks
   }

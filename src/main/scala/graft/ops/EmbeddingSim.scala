@@ -387,24 +387,13 @@ object EmbeddingSim {
     // is forced FIRST (one count job) so the corpus-shaped scan/persist
     // fill still plans adaptively — only the K-row training chain runs
     // non-adaptive.
-    val sess = vectors.sparkSession
     // shuffle width sized from the MEASURED corpus count (~200k quantized
     // vectors ≈ 100 MB per loop partition; rdd.getNumPartitions reads a
     // pre-AQE estimate): non-adaptive loop stages at the session width
     // would run 32 micro-tasks per K-row aggregate
     val corpusRows = corpus.count()
-    val loopParts = math.max((corpusRows / 200000L).toInt + 1, 2)
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    val out =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-        Checkpoints.materialized(cents)
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+    val out = graft.Session.loopRegime(vectors.sparkSession,
+      (corpusRows / 200000L).toInt + 1)(Checkpoints.materialized(cents))
     corpus.unpersist()
     out
   }
@@ -750,20 +739,9 @@ object EmbeddingSim {
     // subvector cache so it cannot outlive the call. Like kmeansCentroids,
     // the materialization runs under the non-adaptive loop regime with the
     // corpus-shaped subvector cache forced first.
-    val sess = vectors.sparkSession
     val svRows = sv.count()
-    val loopParts = math.max((svRows / 800000L).toInt + 1, 2)
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    val out =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-        Checkpoints.materialized(cents)
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+    val out = graft.Session.loopRegime(vectors.sparkSession,
+      (svRows / 800000L).toInt + 1)(Checkpoints.materialized(cents))
     sv.unpersist()
     out
   }

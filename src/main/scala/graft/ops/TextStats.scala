@@ -107,13 +107,8 @@ object TextStats {
                       numMerges: Int): (DataFrame, Seq[DataFrame]) = {
     val sess = words0.sparkSession
     val carryNames = words0.columns.filterNot(_ == "str").toSeq
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    try {
-      var words = words0.localCheckpoint()
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      sess.conf.set("spark.sql.shuffle.partitions",
-        math.max(words.rdd.getNumPartitions, 2).toString)
+    var words = words0.localCheckpoint()
+    graft.Session.loopRegime(sess, words.rdd.getNumPartitions) {
       val merges = scala.collection.mutable.Buffer.empty[DataFrame]
       var rank = 1
       var exhausted = false
@@ -164,9 +159,6 @@ object TextStats {
         rank += 1
       }
       (words, merges.toSeq)
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 
@@ -427,24 +419,15 @@ object TextStats {
       .select(col(docIdCol), explode(tokens(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col(docIdCol), col("w")).agg(count(lit(1)).as("k"))
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    val wordToks =
-      try {
-        val w0 = docWords
-          .filter(length(col("w")) <= maxWordLen)
-          .select(col("w")).distinct()
-          .localCheckpoint()
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        sess.conf.set("spark.sql.shuffle.partitions",
-          math.max(w0.rdd.getNumPartitions, 2).toString)
-        Checkpoints.materialized(
-          uniViterbi(w0, model, maxPieceLen, maxWordLen)
-            .select(col("w"), col("np").as("wtoks")))
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+    val w0 = docWords
+      .filter(length(col("w")) <= maxWordLen)
+      .select(col("w")).distinct()
+      .localCheckpoint()
+    val wordToks = graft.Session.loopRegime(sess, w0.rdd.getNumPartitions) {
+      Checkpoints.materialized(
+        uniViterbi(w0, model, maxPieceLen, maxWordLen)
+          .select(col("w"), col("np").as("wtoks")))
+    }
     docWords.join(wordToks, Seq("w"), "left")
       .withColumn("wtoks",
         coalesce(col("wtoks"), length(col("w")).cast("long")))
@@ -454,21 +437,6 @@ object TextStats {
       .select(col(docIdCol), col("n_tokens"), col("n_chars"),
         round(col("n_chars") * lit(1.0) / col("n_tokens"), 4)
           .as("chars_per_token"))
-  }
-
-  /** The trainer's non-adaptive loop regime (the bpeLoop convention):
-    * AQE off + shuffle partitions pinned to the measured word-table
-    * volume for the duration of `body`, session confs restored after. */
-  private def withUniRegime[A](sess: org.apache.spark.sql.SparkSession,
-                               parts: Int)(body: => A): A = {
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
   }
 
   /** The seed → EM-prune → final-segment loop shared by [[unigramLmVocab]]
@@ -489,14 +457,14 @@ object TextStats {
     val sess = words.sparkSession
     def windows(c: Column): Column = uniWindows(c, maxPieceLen)
     val w0 = words.localCheckpoint()
-    val loopParts = math.max(w0.rdd.getNumPartitions, 2)
+    val loopParts = w0.rdd.getNumPartitions
     def viterbiOf(vocab: DataFrame): DataFrame =
       uniViterbi(w0, vocab, maxPieceLen, maxWordLen)
     def usageFrom(viterbi: DataFrame): DataFrame =
       viterbi.join(w0, "w")
         .select(explode(split(ltrim(col("path")), " ")).as("piece"), col("cnt"))
         .groupBy(col("piece")).agg(sum(col("cnt")).as("u"))
-    val vocab = withUniRegime(sess, loopParts) {
+    val vocab = graft.Session.loopRegime(sess, loopParts) {
       val cand = w0
         .select(col("w"), col("cnt"), explode(windows(col("w"))).as("sp"))
         .select(col("w").substr(col("sp.start") + 1, col("sp.plen")).as("piece"),
@@ -524,7 +492,7 @@ object TextStats {
         v = prune(v, usageFrom(viterbiOf(v)), keepK)
       v
     }
-    val vocabReport = () => withUniRegime(sess, loopParts) {
+    val vocabReport = () => graft.Session.loopRegime(sess, loopParts) {
       // finalUsage has two consumers (the report join and the total);
       // the E-step feeding it has one — materialize only the former
       val finalUsage = Checkpoints.materialized(usageFrom(viterbiOf(vocab)))
@@ -537,7 +505,7 @@ object TextStats {
           .select(col("piece"), length(col("piece")).cast("long").as("piece_len"),
             col("freq"), expr("freq * 1000000 div tot").as("prob_ppm")))
     }
-    val wordToks = () => withUniRegime(sess, loopParts) {
+    val wordToks = () => graft.Session.loopRegime(sess, loopParts) {
       Checkpoints.materialized(
         viterbiOf(vocab).select(col("w"), col("np").as("wtoks")))
     }
@@ -850,7 +818,7 @@ object TextStats {
     * paper), not with a self-trained model, so at 100 TB the model is
     * trained on the small trusted slice and everything else is scored
     * against it ([[ngramPerplexityAgainst]], or per micro-batch via
-    * `StreamOps.screenStreamPpx`). Identical integer arithmetic to the
+    * `StreamOps.screenAgainst`). Identical integer arithmetic to the
     * self-trained form: p(w₂|w₁) = ¾·C₁₂/C₁ + ¼·C₂/T in exact ppm.
     * Output (w1, w2, p_ppm) — DISTINCT-bigram-bounded
     * (vocabulary-shaped); one corpus pass builds both count relations
@@ -1116,12 +1084,7 @@ object TextStats {
     // cached-plan compilation ignores AQE coalescing by default): ~1M
     // narrow feature rows per loop partition, floor 2.
     val featRows = feats.count()
-    val loopParts = math.max((featRows / 1000000L).toInt + 1, 2)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    graft.Session.loopRegime(spark, (featRows / 1000000L).toInt + 1) {
       for (_ <- 0 until iters) {
         val margins = feats.join(broadcast(w), Seq("idx"))
           .groupBy(col("doc_id"))
@@ -1137,9 +1100,6 @@ object TextStats {
             .select(col("idx"),
               (col("weight") + coalesce(col("__g"), lit(0L))).as("weight")))
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     feats.unpersist()
     w

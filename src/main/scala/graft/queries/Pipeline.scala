@@ -511,14 +511,10 @@ object Pipeline {
           // temp view instead of accumulating one table per invocation
           // (sequential by driver contract; the name is free once the
           // previous AvailableNow query terminated)
-          val name = "graft_stream_dedup_screen"
-          val q = graft.streaming.StreamOps.screenStreamExact(stream, store)
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          val out = s.table(name).orderBy(col("doc_id"))
+          val out = Ingest.drainToMemory(
+              graft.streaming.StreamOps.screenStreamExact(stream, store),
+              "graft_stream_dedup_screen")
+            .orderBy(col("doc_id"))
           // guard the silent-empty-stream failure mode — but empty in ⇒
           // empty out must hold (EmptyCorpusSpec), so the guard fires only
           // when a BATCH read of the same sliver finds rows the stream
@@ -556,23 +552,12 @@ object Pipeline {
         |ORDER BY user_id, valid_from_us""") {
       (s, dir) => {
         import s.implicits._
-        // same nanosAsLong/normalize lineage handling as Tables.events,
-        // applied to the STREAMING frame (normalizeEventTs is schema-driven)
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val typed = Tables.normalizeEventTs(Ingest.streamParquet(s, dir, "events"))
+        val typed = Ingest.streamEvents(s, dir)
           .select(col("user_id"), col("ts"), col("event_id"), col("value"))
           .as[graft.streaming.StreamOps.ScdEvent]
-        val name = "graft_stream_scd2"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
-          val q = graft.streaming.StreamOps.scd2Stream(typed).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val out = s.table(name)
+        val out = Ingest.drainToMemory(
+            graft.streaming.StreamOps.scd2Stream(typed).toDF(),
+            "graft_stream_scd2", stateInput = Seq(s"$dir/events.parquet"))
           .select(col("user_id"), col("valid_from_us"), col("valid_to_us"),
             col("value"))
           .orderBy(col("user_id"), col("valid_from_us"))
@@ -614,21 +599,13 @@ object Pipeline {
       (s, dir) => {
         import s.implicits._
         val steps = Seq("view", "click", "purchase")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val typed = Tables.normalizeEventTs(Ingest.streamParquet(s, dir, "events"))
+        val typed = Ingest.streamEvents(s, dir)
           .select(col("user_id"), col("event_type"), col("ts"))
           .as[graft.streaming.StreamOps.FunnelEvent]
-        val name = "graft_stream_funnel"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
-          val q = graft.streaming.StreamOps.funnelStream(typed, steps).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val agg = s.table(name).groupBy(col("step"))
+        val agg = Ingest.drainToMemory(
+            graft.streaming.StreamOps.funnelStream(typed, steps).toDF(),
+            "graft_stream_funnel", stateInput = Seq(s"$dir/events.parquet"))
+          .groupBy(col("step"))
           .agg(count(lit(1)).as("n_users"), sum(col("lag_us")).as("lag"))
         val spine = steps.zipWithIndex
           .map { case (n, i) => (i + 1L, n) }.toDF("step", "step_name")
@@ -657,22 +634,12 @@ object Pipeline {
         |ORDER BY cohort_day, offset_periods""") {
       (s, dir) => {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val typed = Tables.normalizeEventTs(Ingest.streamParquet(s, dir, "events"))
+        val typed = Ingest.streamEvents(s, dir)
           .select(col("user_id"), col("event_type"), col("ts"))
           .as[graft.streaming.StreamOps.FunnelEvent]
-        val name = "graft_stream_retention"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
-          val q = graft.streaming.StreamOps.retentionStream(typed, bucketDays = 7)
-            .toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table(name)
+        Ingest.drainToMemory(
+            graft.streaming.StreamOps.retentionStream(typed, bucketDays = 7).toDF(),
+            "graft_stream_retention", stateInput = Seq(s"$dir/events.parquet"))
           .groupBy(col("cohort_dd"), col("offset_periods"))
           .agg(count(lit(1)).as("n_users"))
           .select(date_format(timestamp_micros(col("cohort_dd") * lit(86400000000L)),
@@ -706,8 +673,7 @@ object Pipeline {
         |              AND e.us >= p.start_us AND e.us < p.end_us
         |GROUP BY 1 ORDER BY purchase_id""") {
       (s, dir) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        def src() = Tables.normalizeEventTs(Ingest.streamParquet(s, dir, "events"))
+        def src() = Ingest.streamEvents(s, dir)
         // Time-bin equi-key on BOTH sides (r20 optimization, guide §2.5/§3):
         // the symmetric-hash join keys state on the equi columns only, so a
         // user-only key probes every stored event of that user per purchase
@@ -737,17 +703,8 @@ object Pipeline {
           col("e_user") === col("p_user") && col("p_bin") === col("e_bin") &&
             col("e_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
             col("e_ts") < col("p_ts"))
-        val name = "graft_stream_interval_join"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
-          val q = joined
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val out = s.table(name)
+        val out = Ingest.drainToMemory(joined, "graft_stream_interval_join",
+            stateInput = Seq(s"$dir/events.parquet"))
           .groupBy(col("purchase_id"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("cents")).as("cents_total"),
@@ -779,23 +736,15 @@ object Pipeline {
         |ORDER BY location""") {
       (s, dir) => {
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val typed = Tables.normalizeEventTs(Ingest.streamParquet(s, dir, "events"))
+        val typed = Ingest.streamEvents(s, dir)
           .select(col("user_id").cast("string").as("location"),
             col("ts").as("event_timestamp"), col("event_id"),
             col("event_type").as("code"), col("value"))
           .as[graft.streaming.StreamOps.ObsState]
-        val name = "graft_stream_latest"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
-          val q = graft.streaming.StreamOps.latestPerKeyStateful(typed).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode(graft.streaming.StreamOps.LatestOutputMode)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val t = s.table(name)
+        val t = Ingest.drainToMemory(
+          graft.streaming.StreamOps.latestPerKeyStateful(typed).toDF(),
+          "graft_stream_latest", stateInput = Seq(s"$dir/events.parquet"),
+          mode = graft.streaming.StreamOps.LatestOutputMode)
         require(t.groupBy(col("location")).count()
             .filter(col("count") > 1).isEmpty,
           "stream_latest_per_key expected a single-batch replay (one " +
@@ -854,19 +803,11 @@ object Pipeline {
         // class the sketch folds closed in r18 — fixed paths/names would
         // collide across concurrent different-corpus executions
         val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, Seq(canonical, replays),
-          s"target/stream_dedup_watermark_in_$tag")
-        val name = s"graft_stream_dedup_wm_$tag"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"target/stream_dedup_watermark_in_$tag")) {
-          val q = graft.streaming.StreamOps.dedupExactStream(in, "30 days")
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val out = s.table(name)
+        val inDir = s"target/stream_dedup_watermark_in_$tag"
+        val in = Ingest.stageOrderedFiles(s, Seq(canonical, replays), inDir)
+        val out = Ingest.drainToMemory(
+            graft.streaming.StreamOps.dedupExactStream(in, "30 days"),
+            s"graft_stream_dedup_wm_$tag", stateInput = Seq(inDir))
           .select(col("fp"), col("doc_id").as("canonical_id"))
           .orderBy(col("fp"))
         require(!out.isEmpty || Tables.documents(s, dir).isEmpty,
@@ -912,7 +853,6 @@ object Pipeline {
         |HAVING max(us) + 480::BIGINT * 60 * 1000000 <= (SELECT wm_us FROM wm)
         |ORDER BY location, session_start_us""") {
       (s, dir) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val ev = Tables.events(s, dir).select(
           col("user_id").cast("string").as("location"),
           col("ts").as("event_timestamp"))
@@ -925,20 +865,13 @@ object Pipeline {
           .select(lit("~wm").as("location"), col("event_timestamp"))
         // tagged staging path + sink name (r18 verdict #1), as above
         val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, Seq(ev, wmDriver),
-          s"target/stream_sessionize_in_$tag")
-        val name = s"graft_stream_sessionize_$tag"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"target/stream_sessionize_in_$tag")) {
-          val q = graft.streaming.StreamOps.sessionizeStream(in,
-              gapMinutes = 480, watermarkDelay = "4 hours")
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val out = s.table(name).filter(col("location") =!= "~wm")
+        val inDir = s"target/stream_sessionize_in_$tag"
+        val in = Ingest.stageOrderedFiles(s, Seq(ev, wmDriver), inDir)
+        val out = Ingest.drainToMemory(
+            graft.streaming.StreamOps.sessionizeStream(in,
+              gapMinutes = 480, watermarkDelay = "4 hours"),
+            s"graft_stream_sessionize_$tag", stateInput = Seq(inDir))
+          .filter(col("location") =!= "~wm")
           .select(col("location"), col("session_start_us"),
             col("session_end_us"), col("n_events"))
           .orderBy(col("location"), col("session_start_us"))

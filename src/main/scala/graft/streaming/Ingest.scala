@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.Tables
 
@@ -157,7 +157,7 @@ object Ingest {
     * the session conf stays the CAP so a genuinely large input still
     * fans out to the session's full width. Floor 2 (the loop-regime
     * floor: never serialize a stateful pipeline to one partition). */
-  def statePartitions(spark: SparkSession, paths: String*): Int = {
+  private def statePartitions(spark: SparkSession, paths: String*): Int = {
     def bytes(f: java.io.File): Long =
       if (f.isDirectory) Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
       else if (f.isFile) f.length else 0L
@@ -170,34 +170,41 @@ object Ingest {
       math.max(2, math.ceil(total.toDouble / math.max(1L, advisory)).toInt))
   }
 
-  /** Run `body` (build + start + drain ONE bounded streaming query) with
-    * `spark.sql.shuffle.partitions` scoped to `n` — the non-adaptive
-    * loop-regime convention ([[graft.ops.Dedup.connectedComponents]])
-    * applied to streaming state. The stream's cloned session snapshots
-    * the conf at `start()`; the query must DRAIN inside `body`
-    * (awaitTermination) so the restore cannot race a running batch, and
-    * the session conf is restored for every plan after it. */
-  def withStateParallelism[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  /** File-stream `dir`/events.parquet with `ts` normalized to µs, the
+    * streaming form of [[graft.Tables.events]]: the same `nanosAsLong`
+    * setting and the same schema-driven [[graft.Tables.normalizeEventTs]]. */
+  def streamEvents(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.normalizeEventTs(streamParquet(spark, dir, "events"))
+  }
+
+  /** Drain ONE bounded streaming query into the in-memory table `name`
+    * and return that table: an AvailableNow trigger, and a block until the
+    * source is drained. A stateful query names its input in `stateInput`;
+    * `spark.sql.shuffle.partitions` is then scoped to
+    * [[statePartitions]] of those paths. The stream's cloned session
+    * snapshots the conf at `start()`, and the query drains inside the
+    * scope, so the restore cannot race a running batch. With no
+    * `stateInput` the query runs at the session's partition count. */
+  def drainToMemory(stream: DataFrame, name: String,
+                    stateInput: Seq[String] = Nil,
+                    mode: OutputMode = OutputMode.Append()): DataFrame = {
+    val spark = stream.sparkSession
+    def run(): Unit = stream.writeStream.format("memory").queryName(name)
+      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    if (stateInput.isEmpty) run()
+    else graft.Session.withConf(spark, "spark.sql.shuffle.partitions" ->
+      statePartitions(spark, stateInput: _*).toString)(run())
+    spark.table(name)
   }
 
   /** Stream `dir`/events.parquet into a fresh named in-memory table and
     * block until the AvailableNow trigger drains. Returns the normalized
     * (µs-timestamp) view of the materialized table. */
-  def materializeEvents(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_events_stream_${counter.incrementAndGet()}"
-    val query = streamParquet(spark, dir, "events")
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    Tables.normalizeEventTs(spark.table(name))
-  }
+  def materializeEvents(spark: SparkSession, dir: String): DataFrame =
+    Tables.normalizeEventTs(drainToMemory(streamParquet(spark, dir, "events"),
+      s"graft_events_stream_${counter.incrementAndGet()}"))
 
   /** FILES-BACKED twin of [[materializeEvents]] — the serve-path table
     * sink at scale (r19 verdict Next #5, closing SURVEY §2.10's own

@@ -304,7 +304,7 @@ object StreamOps {
 
   /** Streaming EXACT dedup on the content fingerprint — the streaming twin
     * of [[graft.ops.Dedup.exact]], completing the incremental-dedup story
-    * next to [[screenStreamNearDups]] (minhash screen): the first arrival
+    * next to [[screenAgainst]] (the frozen-store screens): the first arrival
     * of each distinct content (case/whitespace-normalized md5,
     * [[graft.ops.TextStats.fingerprint]]) passes, replays and re-crawls of
     * the same content drop in-stream.
@@ -314,7 +314,7 @@ object StreamOps {
     * evicted, so state scales with the distinct-content arrival RATE, not
     * corpus lifetime — at 100 TB/day an unbounded fingerprint set is a
     * state-store OOM. Content recurring farther apart than the delay is
-    * the STATIC store's job ([[screenStreamNearDups]]' corpusSig pattern);
+    * the STATIC store's job ([[screenAgainst]]' signature-store pattern);
     * the two compose exactly like exact-first → near-dup in the batch
     * composition contract (Dedup's scaladoc). */
   def dedupExactStream(docsStream: DataFrame, watermarkDelay: String,
@@ -346,142 +346,54 @@ object StreamOps {
     * exists to bound. At 100 TB the store is one fixed-width row per
     * DISTINCT content and the join stays fingerprint-bucketed. */
   def screenStreamExact(docsStream: DataFrame, store: DataFrame,
-                        textCol: String = "text"): DataFrame = {
-    val s =
-      if (store.storageLevel == StorageLevel.NONE)
-        store.persist(StorageLevel.MEMORY_AND_DISK)
-      else store
-    graft.ops.Dedup.exactAgainst(docsStream, s, textCol)
-  }
+                        textCol: String = "text"): DataFrame =
+    graft.ops.Dedup.exactAgainst(docsStream, pinned(store), textCol)
 
-  /** Streaming incremental dedup: screen each arriving micro-batch of
-    * documents against a STATIC corpus signature store
-    * ([[graft.ops.Dedup.minhashSignature]] output, materialized once).
+  /** Streaming screen against FROZEN stores: every micro-batch is scored
+    * by `score`, the batch operator applied unchanged, and handed to
+    * `onBatch` with its batchId. One screen serves the whole frozen-store
+    * family: a minhash signature store
+    * ([[graft.ops.Dedup.minhashLshPairsAgainst]]), SemDeDup centroids and
+    * survivors ([[graft.ops.EmbeddingSim.semanticDedupAgainst]]), an
+    * n-gram LM ([[graft.ops.TextStats.ngramPerplexityAgainst]]), a unigram
+    * vocabulary ([[graft.ops.TextStats.unigramEncodeAgainst]]) and
+    * perceptron weights ([[graft.ops.TextStats.qualityScoreAgainst]]).
+    * Stream ≡ batch per micro-batch holds by construction. Emit to a sink,
+    * a table or a quarantine topic in `onBatch`, as the deployment needs.
     *
-    * Why foreachBatch and not a streaming join: the batch side's signature
-    * is an aggregation over its exploded shingles, and a streaming
-    * aggregation keyed by doc_id would accumulate doc state across batches
-    * (wrong semantic — each doc arrives whole in one batch) and force
-    * update mode. Inside foreachBatch the micro-batch is a plain static
-    * frame, so the exact batch operator applies unchanged, per batch —
-    * Spark's own recommended pattern for batch-complete work on streams.
-    * `onPairs` receives (near-dup pairs, batchId); emit to a sink, a delta
-    * table, or a quarantine topic as the deployment demands.
+    * Why foreachBatch and not a streaming join: these operators aggregate
+    * per document or vector (signature bands, cell assignment, per-doc
+    * sums), and a streaming aggregation keyed by doc_id would carry state
+    * across batches (wrong: each doc arrives whole in one batch) and
+    * force update mode. Inside foreachBatch the micro-batch is a plain
+    * static frame — Spark's own pattern for batch-complete work on
+    * streams.
     *
-    * The signature store is persisted HERE (idempotent if the caller
-    * already cached it): "materialized once" must not depend on caller
-    * discipline — an unpersisted corpusSig would re-execute the full
-    * corpus shingle+minhash lineage on EVERY micro-batch, unbounding
-    * exactly the per-batch cost this operator exists to bound. */
-  /** Streaming incremental SEMANTIC dedup — the embedding-space twin of
-    * [[screenStreamNearDups]], completing the streaming screen family
-    * (exact fingerprint / minhash signature / SemDeDup survivor store):
-    * each arriving micro-batch of vectors is screened against the STATIC
-    * SemDeDup state ([[graft.ops.EmbeddingSim.kmeansCentroids]]-trained
-    * centroids + [[graft.ops.EmbeddingSim.semanticSurvivors]]) with
-    * [[graft.ops.EmbeddingSim.semanticDedupAgainst]] applied unchanged
-    * per batch — stream ≡ batch by construction, spec-pinned.
-    *
-    * foreachBatch for the same reason as the minhash screen: the batch
-    * side's cell assignment is an aggregation over the batch's centroid
-    * candidates, which as a streaming aggregation would accumulate
-    * per-vector state across batches (each vector arrives whole in one
-    * batch) and force update mode. Both static sides are persisted HERE
-    * (idempotent if the caller already cached them): an unpersisted
-    * survivor store would re-execute its full corpus lineage — training,
-    * assignment, the within-cell dominance join — on EVERY micro-batch,
-    * unbounding exactly the per-batch cost the store exists to bound.
-    * The per-batch cost stays batch·(store cell depth): the batch joins
-    * only the survivor store on cid, never a corpus. `onKept` receives
-    * ((vec_id, cid, is_kept), batchId) per batch. */
-  def screenStreamSemantic(vecStream: DataFrame, centroids: DataFrame,
-                           survivors: DataFrame,
-                           onKept: (DataFrame, Long) => Unit,
-                           threshold: Double = 0.45)
+    * The `stores` are pinned HERE (idempotent if the caller already
+    * cached them): an unpinned store would re-execute its whole lineage —
+    * corpus shingling, training, the dominance join — on EVERY
+    * micro-batch, unbounding exactly the per-batch cost a frozen store
+    * exists to bound. `score` may name the stores directly: pinning
+    * caches the same plans. */
+  def screenAgainst(stream: DataFrame, stores: DataFrame*)(
+      score: DataFrame => DataFrame,
+      onBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    def pinned(df: DataFrame): DataFrame =
-      if (df.storageLevel == StorageLevel.NONE)
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-      else df
-    val cents = pinned(centroids)
-    val surv = pinned(survivors)
-    vecStream.writeStream
+    stores.foreach(pinned)
+    stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onKept(graft.ops.EmbeddingSim.semanticDedupAgainst(
-          batch, cents, surv, threshold), batchId)
+        onBatch(score(batch), batchId)
       }
   }
 
-  /** Streaming twin of [[graft.ops.TextStats.ngramPerplexityAgainst]] —
-    * the quality-gate member of the incremental screen family (exact
-    * fingerprints, minhash bands, semantic survivors, and now the CCNet
-    * LM gate): a frozen [[graft.ops.TextStats.ngramLmModel]] relation is
-    * pinned once and every micro-batch scores against it unchanged, so
-    * stream ≡ batch per micro-batch BY CONSTRUCTION and no micro-batch
-    * replays the model's training lineage. Per-batch cost is
-    * batch-bigrams ⋈ vocabulary-shaped model. */
-  def screenStreamPpx(docsStream: DataFrame, model: DataFrame,
-                      onScored: (DataFrame, Long) => Unit,
-                      maxAvgBitsX100: Int = 1200)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val m =
-      if (model.storageLevel == StorageLevel.NONE)
-        model.persist(StorageLevel.MEMORY_AND_DISK)
-      else model
-    docsStream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onScored(graft.ops.TextStats.ngramPerplexityAgainst(
-          batch, m, maxAvgBitsX100), batchId)
-      }
-  }
-
-  /** Streaming twin of [[graft.ops.TextStats.unigramEncodeAgainst]] — the
-    * tokenizer member of the frozen-model screen family: the unigram-LM
-    * vocabulary ([[graft.ops.TextStats.unigramVocabModel]]) is pinned
-    * once and every micro-batch encodes against it unchanged, so stream ≡
-    * batch per micro-batch BY CONSTRUCTION and no micro-batch replays the
-    * trainer. Per-batch cost is one (doc, word) count shuffle + a
-    * distinct-batch-words Viterbi against the vocabulary-shaped model. */
-  def encodeStreamAgainst(docsStream: DataFrame, model: DataFrame,
-                          onEncoded: (DataFrame, Long) => Unit,
-                          maxPieceLen: Int = 4, maxWordLen: Int = 10)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val m =
-      if (model.storageLevel == StorageLevel.NONE)
-        model.persist(StorageLevel.MEMORY_AND_DISK)
-      else model
-    docsStream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onEncoded(graft.ops.TextStats.unigramEncodeAgainst(
-          batch, m, maxPieceLen, maxWordLen), batchId)
-      }
-  }
-
-  /** Streaming twin of [[graft.ops.TextStats.qualityScoreAgainst]] — the
-    * classifier member of the frozen-model screen family: perceptron
-    * weights ([[graft.ops.TextStats.qualityModelTrain]]) are pinned once
-    * and every micro-batch scores against the dims-row relation
-    * unchanged, so stream ≡ batch per micro-batch BY CONSTRUCTION with
-    * no training-lineage replay. Per-batch cost is one feature explode +
-    * the broadcast weight join + a per-doc margin aggregate. */
-  def screenStreamQuality(docsStream: DataFrame, weights: DataFrame,
-                          onScored: (DataFrame, Long) => Unit,
-                          dims: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w =
-      if (weights.storageLevel == StorageLevel.NONE)
-        weights.persist(StorageLevel.MEMORY_AND_DISK)
-      else weights
-    docsStream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onScored(graft.ops.TextStats.qualityScoreAgainst(batch, w, dims),
-          batchId)
-      }
-  }
+  /** `df` persisted MEMORY_AND_DISK unless it is already cached: the
+    * static side of a streaming screen or fold must not re-run its
+    * lineage per micro-batch. */
+  private def pinned(df: DataFrame): DataFrame =
+    if (df.storageLevel == StorageLevel.NONE)
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    else df
 
   /** Streaming STORE MAINTENANCE for the KMV sketch family — the
     * production loop [[graft.ops.Sketches.kmvMergeAgainst]] is built for,
@@ -579,10 +491,7 @@ object StreamOps {
   def ivfIndexUpdateStream(vecStream: DataFrame, centroids: DataFrame,
                            storeDir: String, compactKeepLast: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val cents =
-      if (centroids.storageLevel == StorageLevel.NONE)
-        centroids.persist(StorageLevel.MEMORY_AND_DISK)
-      else centroids
+    val cents = pinned(centroids)
     sketchUpdateStream(vecStream, storeDir,
       b => graft.ops.EmbeddingSim.ivfIndex(b, cents),
       (store, b) => store.unionByName(b),
@@ -620,10 +529,6 @@ object StreamOps {
                                fineT: DataFrame, storeDir: String,
                                compactKeepLast: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    def pinned(df: DataFrame): DataFrame =
-      if (df.storageLevel == StorageLevel.NONE)
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-      else df
     val c = pinned(coarse)
     val f = pinned(fineT)
     sketchUpdateStream(vecStream, storeDir,
@@ -657,10 +562,7 @@ object StreamOps {
   def ivfIndexUpsertStream(vecStream: DataFrame, centroids: DataFrame,
                            storeDir: String, compactKeepLast: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val cents =
-      if (centroids.storageLevel == StorageLevel.NONE)
-        centroids.persist(StorageLevel.MEMORY_AND_DISK)
-      else centroids
+    val cents = pinned(centroids)
     def summarize(b: DataFrame): DataFrame =
       graft.ops.EmbeddingSim.ivfIndex(
           b.filter(col("op") === "upsert"), cents)
@@ -910,22 +812,5 @@ object StreamOps {
       .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+") &&
         fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
       .map(_.getPath.getName.drop(1).toLong)
-  }
-
-  def screenStreamNearDups(docsStream: DataFrame, corpusSig: DataFrame,
-                           onPairs: (DataFrame, Long) => Unit,
-                           numHashes: Int = 16, bands: Int = 4,
-                           threshold: Double = 0.5)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sig =
-      if (corpusSig.storageLevel == StorageLevel.NONE)
-        corpusSig.persist(StorageLevel.MEMORY_AND_DISK)
-      else corpusSig
-    docsStream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onPairs(graft.ops.Dedup.minhashLshPairsAgainst(
-          batch, sig, numHashes, bands, threshold), batchId)
-      }
   }
 }

@@ -125,25 +125,15 @@ class AnnRecallSpec extends AnyFunSuite with SparkFixture {
     // A FRESH path, never counted in this JVM: the (path, modTime) memo is
     // process-global, so counting a shared fixture path here could hit the
     // cache and make the no-job assertion vacuous. The write's own jobs and
-    // the count() run before the listener attaches; the listener-bus drain
-    // replaces a sleep (the bus is async — a sleep is a guess, the drain is
-    // a guarantee).
+    // the count() run before the counter attaches.
     val tmp = java.nio.file.Files.createTempDirectory("graft_rowcount")
     val path = s"$tmp/emb.parquet"
     vectors.write.parquet(path)
     val expected = vectors.count()
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = Tables.parquetRowCount(spark, path)
-      org.apache.spark.graft.BlockHygiene.drainListenerBus(spark.sparkContext)
-      assert(jobs === 0, "footer-metadata count must not launch a Spark job")
-      assert(n === expected)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    var n = 0L
+    val jobs = Prof.jobsDuring(spark) { n = Tables.parquetRowCount(spark, path) }
+    assert(jobs === 0, "footer-metadata count must not launch a Spark job")
+    assert(n === expected)
   }
 
   test("k-means-trained IVF keeps recall at or above its floor") {

@@ -40,10 +40,7 @@ class FastMd5Spec extends AnyFunSuite with SparkFixture {
       .groupBy(col("g")).agg(count(when(substring(col("h"), 1, 1) >= "8", 1)).as("n"))
       .orderBy("g").collect().map(_.getLong(1)).toSeq
     val on = agg()
-    val off = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try assert(agg() === on)
-    finally spark.conf.set("spark.sql.codegen.wholeStage", off)
+    assert(Session.withConf(spark, "spark.sql.codegen.wholeStage" -> "false")(agg()) === on)
     // and the interpreted path agrees with the builtin on the same data
     val cmp = df.select(fastMd5(col("t")).as("f"), md5(col("t")).as("m"))
       .filter(col("f") =!= col("m")).count()

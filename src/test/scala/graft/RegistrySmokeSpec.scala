@@ -22,7 +22,12 @@ class RegistrySmokeSpec extends AnyFunSuite with SparkFixture {
   test("every registry query executes against sf0.001") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(dir).isDirectory, s"$dir not present")
+    val regime = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    def confs() = regime.map(spark.conf.getOption)
+    val before = confs()
     val failures = runRegistry(dir)
     assert(failures.isEmpty, s"${failures.size} queries failed:\n" + failures.mkString("\n"))
+    // every scoped regime (Session.withConf) is restored after its query
+    assert(confs() == before, s"$regime leaked: $before -> ${confs()}")
   }
 }

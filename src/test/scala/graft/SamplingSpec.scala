@@ -91,13 +91,13 @@ class SamplingSpec extends AnyFunSuite with SparkFixture {
     // 1 and 3 both hit the 32-bucket floor (the floor itself is under
     // test there); 33/64/128 exercise genuinely different bucket counts.
     val expected = windowReference(13)
-    val orig = spark.conf.get("spark.sql.shuffle.partitions")
-    try for (b <- Seq("1", "33", "64", "128")) {
-      spark.conf.set("spark.sql.shuffle.partitions", b)
-      val got = Sampling.stratifiedQuota(corpus, "lang", 13)
-        .select("doc_id").as[Long].collect().toSet
+    for (b <- Seq("1", "33", "64", "128")) {
+      val got = Session.withConf(spark, "spark.sql.shuffle.partitions" -> b) {
+        Sampling.stratifiedQuota(corpus, "lang", 13)
+          .select("doc_id").as[Long].collect().toSet
+      }
       assert(got === expected, s"buckets=$b diverged")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", orig)
+    }
   }
 
   test("mixTemperature flattens skew toward sqrt(count) ratios, keeps scarce strata") {

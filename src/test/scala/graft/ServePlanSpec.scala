@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graft.BlockHygiene
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -45,17 +43,8 @@ class ServePlanSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlan
     "recent_bucketed" -> (() => Recent.recentWithStep(one, 6, 1, Seq("value"))))
 
   private def jobsPerCollect(df: => DataFrame): Int = {
-    val sc = spark.sparkContext
     df.collect() // a first run pays one-off planning work, not counted
-    var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
-    }
-    BlockHygiene.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { df.collect(); BlockHygiene.drainListenerBus(sc) }
-    finally sc.removeSparkListener(listener)
-    listener.synchronized(jobs)
+    Prof.jobsDuring(spark)(df.collect())
   }
 
   test("each rollup scans once, shuffles at most once, and plans no join or broadcast") {

@@ -20,6 +20,23 @@ class SessionSpec extends AnyFunSuite with SparkFixture {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
+  test("withConf scopes confs to its body and restores them, on a throw too") {
+    val parts = "spark.sql.shuffle.partitions"
+    val unset = "graft.test.scoped"
+    val before = spark.conf.get(parts)
+    assert(before != "7" && spark.conf.getOption(unset).isEmpty)
+    def restored = spark.conf.get(parts) == before && spark.conf.getOption(unset).isEmpty
+    val inside = Session.withConf(spark, parts -> "7", unset -> "on") {
+      (spark.conf.get(parts), spark.conf.get(unset))
+    }
+    assert(inside == ("7", "on"))
+    assert(restored)
+    intercept[IllegalStateException] {
+      Session.withConf(spark, parts -> "7", unset -> "on")(throw new IllegalStateException)
+    }
+    assert(restored)
+  }
+
   test("reset drops cached relations, persisted RDDs and broadcast blocks") {
     val sc = spark.sparkContext
     val cached = spark.range(1000).toDF("k").cache()

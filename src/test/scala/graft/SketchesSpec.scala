@@ -898,8 +898,7 @@ class SketchesSpec extends AnyFunSuite with SparkFixture {
     // spark.hadoop. prefix is only stripped at context creation), so the
     // bare key is what a session-level override actually looks like
     val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    spark.conf.set(key, "false")
-    try {
+    Session.withConf(spark, key -> "false") {
       val in = graft.streaming.Ingest.stageOrderedFiles(spark,
         Seq(Seq(("g", "k")).toDF("grp", "key")),
         "target/test_marker_gate_in")
@@ -909,7 +908,7 @@ class SketchesSpec extends AnyFunSuite with SparkFixture {
       }
       assert(e.getMessage.contains("marksuccessfuljobs"),
         s"wrong failure: ${e.getMessage}")
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("store walker is Hadoop-FS-backed: file:-scheme URIs work and a marker-less (crashed) version is invisible") {

@@ -504,8 +504,9 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
 
     val input = MemoryStream[(Long, String)]
     val collected = scala.collection.mutable.Map[Long, Set[(Long, Long)]]()
-    val query = StreamOps.screenStreamNearDups(
-      input.toDF().toDF("doc_id", "text"), corpusSig,
+    val query = StreamOps.screenAgainst(
+        input.toDF().toDF("doc_id", "text"), corpusSig)(
+      Dedup.minhashLshPairsAgainst(_, corpusSig),
       (pairs, batchId) => collected.synchronized {
         collected(batchId) = pairs.collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -548,12 +549,13 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
 
     val input = MemoryStream[(Long, Array[Float])]
     val collected = scala.collection.mutable.Map[Long, Map[Long, Long]]()
-    val query = StreamOps.screenStreamSemantic(
-      input.toDF().toDF("vec_id", "embedding"), cents, surv,
+    val query = StreamOps.screenAgainst(
+        input.toDF().toDF("vec_id", "embedding"), cents, surv)(
+      EmbeddingSim.semanticDedupAgainst(_, cents, surv, threshold = 0.9),
       (kept, batchId) => collected.synchronized {
         collected(batchId) = kept.collect()
           .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("is_kept")).toMap
-      }, threshold = 0.9).start()
+      }).start()
 
     val b1 = Seq((100L, block(0)), (101L, block(1)), (104L, novel))
     input.addData(b1: _*)
@@ -660,12 +662,13 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
     ).toDF("doc_id", "text"))
     val collected = scala.collection.mutable.Map[Long, Map[Long, Row]]()
     val input = MemoryStream[(Long, String)]
-    val query = StreamOps.screenStreamPpx(
-      input.toDF().toDF("doc_id", "text"), model,
+    val query = StreamOps.screenAgainst(
+        input.toDF().toDF("doc_id", "text"), model)(
+      TextStats.ngramPerplexityAgainst(_, model, maxAvgBitsX100 = 1200),
       (scored, batchId) => collected.synchronized {
         collected(batchId) = scored.collect()
           .map(r => r.getAs[Long]("doc_id") -> r).toMap
-      }, maxAvgBitsX100 = 1200).start()
+      }).start()
 
     val b1 = Seq((10L, "a b a b"), (11L, "z z z"))
     input.addData(b1: _*)
@@ -709,12 +712,13 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
       minSeedFreq = 1L, seedMax = 10)
     val collected = scala.collection.mutable.Map[Long, Map[Long, Row]]()
     val input = MemoryStream[(Long, String)]
-    val query = StreamOps.encodeStreamAgainst(
-      input.toDF().toDF("doc_id", "text"), model,
+    val query = StreamOps.screenAgainst(
+        input.toDF().toDF("doc_id", "text"), model)(
+      TextStats.unigramEncodeAgainst(_, model, maxPieceLen = 2, maxWordLen = 4),
       (encoded, batchId) => collected.synchronized {
         collected(batchId) = encoded.collect()
           .map(r => r.getAs[Long]("doc_id") -> r).toMap
-      }, maxPieceLen = 2, maxWordLen = 4).start()
+      }).start()
 
     val b1 = Seq((10L, "ab ab"), (11L, "xq ab"))
     input.addData(b1: _*)
@@ -758,8 +762,9 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
           .otherwise(-1L).as("y")), iters = 4)
     val collected = scala.collection.mutable.Map[Long, Map[Long, Row]]()
     val input = MemoryStream[(Long, String)]
-    val query = StreamOps.screenStreamQuality(
-      input.toDF().toDF("doc_id", "text"), weights,
+    val query = StreamOps.screenAgainst(
+        input.toDF().toDF("doc_id", "text"), weights)(
+      TextStats.qualityScoreAgainst(_, weights),
       (scored, batchId) => collected.synchronized {
         collected(batchId) = scored.collect()
           .map(r => r.getAs[Long]("doc_id") -> r).toMap
