@@ -9,15 +9,13 @@ import java.nio.file.{Files, Paths}
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional query filter (SPARK_GRAFT_ONLY, as in Verify) for
+    // targeted before/after plan capture during optimization rounds
+    val chosen = SparkEntry.selected()
     val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated query filter (as in Verify) for
-    // targeted before/after plan capture during optimization rounds
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    chosen.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -13,4 +13,15 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     Registry.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+  /** The queries `only` (comma-separated names; `SPARK_GRAFT_ONLY` for
+    * `Verify` and `Explain`) selects, or all of them when unset. A name
+    * not in the registry throws, listing the registry, so a misspelt
+    * filter cannot select nothing and pass. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { list =>
+      val names = list.split(",").toSet
+      Prof.requireKnown(names.toSeq)
+      queries.filter { case (name, _) => names(name) }
+    }
 }

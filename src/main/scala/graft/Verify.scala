@@ -5,25 +5,24 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional targeted-iteration filter (SPARK_GRAFT_ONLY), checked
+    // before the session starts
+    val chosen = SparkEntry.selected()
     val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional targeted-iteration filter: comma-separated query names.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-        }
-        // Per-query hygiene. Cost: a few ms per query (~1-2 s over a full
-        // verify run); correctness output is unaffected either way.
-        Session.reset(spark)
+    chosen.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
+      // Per-query hygiene. Cost: a few ms per query (~1-2 s over a full
+      // verify run); correctness output is unaffected either way.
+      Session.reset(spark)
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -6,6 +6,7 @@ import graft.ingest.Parse
 import graft.ops.{AsofJoin, EmbeddingSim, EventAnalytics, Forecast, IntervalJoin, Latest, Multimodal, Rollup, Sequences, Sketches}
 import graft.streaming.Ingest
 import graft.functions.FastMd5.fastMd5
+import QuerySpec.hexKeySql
 
 /** Sequence assembly, forecasting, as-of joins, pivot, streaming ingest and
   * multimodal plumbing — the remaining SURVEY.md §7.2 build steps (5-8) as
@@ -16,31 +17,105 @@ object Pipeline {
   private def obs(s: org.apache.spark.sql.SparkSession, dir: String) =
     Parse.eventsAsObservations(Tables.events(s, dir))
 
-  /** Per-corpus suffix for streaming staging/store directories under
-    * target/ (ADVICE r17): two executions of the same staged-replay query
-    * against DIFFERENT corpora (e.g. the sf0.001 bench warm-up and the
-    * sf0.1 timed run, or a parallelized Verify) must not race on a shared
-    * fixed path. Name + an md5 prefix of the FULL path (review r18: a
-    * 32-bit String.hashCode leaves a silent-collision space between
-    * same-basename checkouts; md5's 64 bits here do not).
-    *
-    * CONTRACT (ADVICE r18): the tag is a pure function of the corpus dir —
-    * deliberately, so reruns against one corpus REPLACE their staging and
-    * store scratch instead of accumulating one copy per invocation under
-    * target/ (envelope runs repeat the bench many times). The corollary is
-    * that a given corpus dir must not run the SAME staged-replay query
-    * CONCURRENTLY in one working directory: two such executions would
-    * interleave deleteRecursively/write on the shared tagged path. The
-    * driver contract runs queries sequentially; parallel harnesses must
-    * shard by corpus dir (different dirs never collide). */
-  private def stagingTag(dir: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    // single-part-identifier-safe (the tag also names memory-sink temp
-    // views, which reject dots as multi-part names): sf0.01 → sf0_01
-    new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9_]", "_") +
-      "_" + md5
-  }
+  /** The oracle of `q_attribution_window`, shared by `stream_interval_join`. */
+  private[queries] val AttributionWindowSql: String =
+    """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
+      |                  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      |p AS (SELECT event_id AS purchase_id, user_id, us AS end_us,
+      |             us - 1800000000 AS start_us
+      |      FROM e WHERE event_type = 'purchase')
+      |SELECT purchase_id, CAST(count(*) AS BIGINT) AS n_events,
+      |       CAST(sum(e.cents) AS BIGINT) AS cents_total, max(e.us) AS last_us
+      |FROM p JOIN e ON e.user_id = p.user_id
+      |              AND e.us >= p.start_us AND e.us < p.end_us
+      |GROUP BY 1 ORDER BY purchase_id"""
+
+  /** The oracle of `q_funnel_steps`, shared by `stream_funnel`. */
+  private[queries] val FunnelStepsSql: String =
+    """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
+      |s1 AS (SELECT user_id, min(us) AS t FROM e
+      |       WHERE event_type = 'view' GROUP BY user_id),
+      |s2 AS (SELECT e.user_id, min(e.us) AS t, min(s1.t) AS t_prev
+      |       FROM e JOIN s1 ON e.user_id = s1.user_id
+      |       WHERE e.event_type = 'click' AND e.us > s1.t GROUP BY e.user_id),
+      |s3 AS (SELECT e.user_id, min(e.us) AS t, min(s2.t) AS t_prev
+      |       FROM e JOIN s2 ON e.user_id = s2.user_id
+      |       WHERE e.event_type = 'purchase' AND e.us > s2.t GROUP BY e.user_id)
+      |SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
+      |       CAST(count(*) AS BIGINT) AS n_users, CAST(0 AS BIGINT) AS total_lag_us FROM s1
+      |UNION ALL
+      |SELECT 2, 'click', count(*), CAST(coalesce(sum(t - t_prev), 0) AS BIGINT) FROM s2
+      |UNION ALL
+      |SELECT 3, 'purchase', count(*), CAST(coalesce(sum(t - t_prev), 0) AS BIGINT) FROM s3
+      |ORDER BY step"""
+
+  /** The oracle of `q_retention_cohorts`, shared by `stream_retention`. */
+  private[queries] val RetentionCohortsSql: String =
+    """WITH a AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS dd FROM events),
+      |c AS (SELECT user_id, min(dd) AS cohort_dd FROM a GROUP BY user_id),
+      |x AS (SELECT DISTINCT c.cohort_dd, (a.dd - c.cohort_dd) // 7 AS offset_periods,
+      |                      a.user_id
+      |      FROM a JOIN c ON a.user_id = c.user_id)
+      |SELECT strftime(make_timestamp(cohort_dd * 86400000000), '%Y-%m-%d') AS cohort_day,
+      |       offset_periods, CAST(count(*) AS BIGINT) AS n_users
+      |FROM x GROUP BY cohort_dd, offset_periods
+      |ORDER BY cohort_day, offset_periods"""
+
+  /** The oracle of `sketch_kmv_merge`, shared by
+    * `stream_kmv_update` and `stream_kmv_compacted`. */
+  private[queries] val KmvMergeSql: String =
+    s"""WITH h AS (
+      |  SELECT DISTINCT event_type AS part,
+      |         ${hexKeySql("user_id::VARCHAR")} AS hk
+      |  FROM events WHERE user_id IS NOT NULL),
+      |b AS (SELECT part, hk, row_number() OVER (PARTITION BY part ORDER BY hk) AS rn FROM h),
+      |g AS (SELECT part, CAST(count(*) AS BIGINT) AS n_kept, max(hk) AS kth_hash
+      |      FROM b WHERE rn <= 64 GROUP BY part)
+      |SELECT part, n_kept, kth_hash,
+      |       CASE WHEN n_kept < 64 THEN n_kept
+      |            ELSE (63 * 4294967296) // kth_hash END AS est_distinct
+      |FROM g ORDER BY part"""
+
+  /** The oracle of `sketch_kmv_quantiles`, shared by
+    * `stream_quantile_update`. */
+  private[queries] val KmvQuantilesSql: String =
+    s"""WITH h AS (
+      |  SELECT DISTINCT event_type AS part,
+      |         (hk % 2147483648) * 4294967296
+      |           + (CAST(floor(value * 100) AS BIGINT) + 2147483648) AS pk
+      |  FROM (SELECT event_type, value,
+      |               ${hexKeySql("event_id::VARCHAR")} AS hk
+      |        FROM events WHERE event_id IS NOT NULL AND value IS NOT NULL)),
+      |b AS (SELECT part, pk, row_number() OVER (PARTITION BY part ORDER BY pk) AS rn FROM h),
+      |sk AS (SELECT part, pk % 4294967296 - 2147483648 AS v FROM b WHERE rn <= 128),
+      |o AS (SELECT part, v, row_number() OVER (PARTITION BY part ORDER BY v) AS vr,
+      |             count(*) OVER (PARTITION BY part) AS n FROM sk)
+      |SELECT part, CAST(max(n) AS BIGINT) AS n_kept,
+      |       CAST(max(CASE WHEN vr = (25 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p25_cents,
+      |       CAST(max(CASE WHEN vr = (50 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p50_cents,
+      |       CAST(max(CASE WHEN vr = (75 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p75_cents,
+      |       CAST(max(CASE WHEN vr = (99 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p99_cents
+      |FROM o GROUP BY part ORDER BY part"""
+
+  /** The oracle of `sketch_cms_freq`, shared by `stream_cms_update`. */
+  private[queries] val CmsFreqSql: String =
+    s"""WITH d4 AS (SELECT unnest([0, 1, 2, 3]) AS d),
+      |cells AS (
+      |  SELECT event_type AS part, d,
+      |         ${hexKeySql("'cms' || d::VARCHAR || '|' || user_id::VARCHAR")} % 1024 AS bucket,
+      |         CAST(count(*) AS BIGINT) AS cnt
+      |  FROM events CROSS JOIN d4 WHERE user_id IS NOT NULL
+      |  GROUP BY 1, 2, 3),
+      |probes AS (SELECT DISTINCT event_type AS part, user_id
+      |           FROM events WHERE user_id IS NOT NULL AND user_id % 10 = 0),
+      |pc AS (
+      |  SELECT p.part, p.user_id, d,
+      |         ${hexKeySql("'cms' || d::VARCHAR || '|' || p.user_id::VARCHAR")} % 1024 AS bucket
+      |  FROM probes p CROSS JOIN d4)
+      |SELECT pc.part, pc.user_id, min(coalesce(c.cnt, 0)) AS est_cnt
+      |FROM pc LEFT JOIN cells c
+      |  ON c.part = pc.part AND c.d = pc.d AND c.bucket = pc.bucket
+      |GROUP BY 1, 2 ORDER BY pc.part, pc.user_id"""
 
   val all: Seq[QuerySpec] = Seq(
 
@@ -190,17 +265,7 @@ object Pipeline {
     // Attribution-window join (interval×point): per purchase, the same
     // user's events in the 30 minutes before it — bin-bucketed equi-join
     // on (user, time-bin) + residual, never a theta join; cent-exact sums.
-    QuerySpec.sql("q_attribution_window",
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-        |                  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |p AS (SELECT event_id AS purchase_id, user_id, us AS end_us,
-        |             us - 1800000000 AS start_us
-        |      FROM e WHERE event_type = 'purchase')
-        |SELECT purchase_id, CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(e.cents) AS BIGINT) AS cents_total, max(e.us) AS last_us
-        |FROM p JOIN e ON e.user_id = p.user_id
-        |              AND e.us >= p.start_us AND e.us < p.end_us
-        |GROUP BY 1 ORDER BY purchase_id""") {
+    QuerySpec.sql("q_attribution_window", AttributionWindowSql) {
       (s, dir) =>
         IntervalJoin.attributionWindow(Tables.events(s, dir), windowMinutes = 30)
           .orderBy(col("purchase_id"))
@@ -280,23 +345,7 @@ object Pipeline {
     // Ordered funnel view→click→purchase: per-user earliest strictly-
     // increasing chain, reach counts + integer-exact conversion lag. The
     // oracle replays the same per-step min-aggregate/join chain.
-    QuerySpec.sql("q_funnel_steps",
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-        |s1 AS (SELECT user_id, min(us) AS t FROM e
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(e.us) AS t, min(s1.t) AS t_prev
-        |       FROM e JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'click' AND e.us > s1.t GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(e.us) AS t, min(s2.t) AS t_prev
-        |       FROM e JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'purchase' AND e.us > s2.t GROUP BY e.user_id)
-        |SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
-        |       CAST(count(*) AS BIGINT) AS n_users, CAST(0 AS BIGINT) AS total_lag_us FROM s1
-        |UNION ALL
-        |SELECT 2, 'click', count(*), CAST(coalesce(sum(t - t_prev), 0) AS BIGINT) FROM s2
-        |UNION ALL
-        |SELECT 3, 'purchase', count(*), CAST(coalesce(sum(t - t_prev), 0) AS BIGINT) FROM s3
-        |ORDER BY step""") {
+    QuerySpec.sql("q_funnel_steps", FunnelStepsSql) {
       (s, dir) =>
         EventAnalytics.funnel(Tables.events(s, dir), Seq("view", "click", "purchase"))
           .orderBy(col("step"))
@@ -304,16 +353,7 @@ object Pipeline {
 
     // Weekly cohort retention: first-seen-day cohorts × active-period
     // offsets, all integer epoch-day arithmetic.
-    QuerySpec.sql("q_retention_cohorts",
-      """WITH a AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS dd FROM events),
-        |c AS (SELECT user_id, min(dd) AS cohort_dd FROM a GROUP BY user_id),
-        |x AS (SELECT DISTINCT c.cohort_dd, (a.dd - c.cohort_dd) // 7 AS offset_periods,
-        |                      a.user_id
-        |      FROM a JOIN c ON a.user_id = c.user_id)
-        |SELECT strftime(make_timestamp(cohort_dd * 86400000000), '%Y-%m-%d') AS cohort_day,
-        |       offset_periods, CAST(count(*) AS BIGINT) AS n_users
-        |FROM x GROUP BY cohort_dd, offset_periods
-        |ORDER BY cohort_day, offset_periods""") {
+    QuerySpec.sql("q_retention_cohorts", RetentionCohortsSql) {
       (s, dir) =>
         EventAnalytics.retentionCohorts(Tables.events(s, dir), bucketDays = 7)
           .orderBy(col("cohort_day"), col("offset_periods"))
@@ -453,21 +493,7 @@ object Pipeline {
     // S2→S3→S4: stream the events parquet through an AvailableNow
     // Structured Streaming query into a memory sink, then run the hourly
     // rollup on the materialized table — one plan-builder, two sources.
-    QuerySpec.sql("stream_hourly_rollup",
-      """WITH agg AS (
-        |  SELECT CAST(hour(ts) AS INT) AS hour,
-        |         epoch_us(min(ts)) AS window_start_us,
-        |         epoch_us(max(ts)) AS window_end_us,
-        |         count(*) AS n_rows, round(avg(value), 4) AS avg_value
-        |  FROM events GROUP BY 1),
-        |modal AS (
-        |  SELECT hour, event_type AS modal_code, cnt AS modal_count FROM (
-        |    SELECT CAST(hour(ts) AS INT) AS hour, event_type, count(*) AS cnt,
-        |           row_number() OVER (PARTITION BY CAST(hour(ts) AS INT)
-        |             ORDER BY count(*) DESC, event_type ASC) AS rn
-        |    FROM events GROUP BY 1, 2) WHERE rn = 1)
-        |SELECT agg.*, modal.modal_code, modal.modal_count
-        |FROM agg LEFT JOIN modal USING (hour) ORDER BY hour""") {
+    QuerySpec.sql("stream_hourly_rollup", Weather.HourlyRollupSql) {
       (s, dir) => {
         val streamed = Parse.eventsAsObservations(Ingest.materializeEvents(s, dir))
         Rollup.hourly(streamed, avgCols = Seq("value"))
@@ -486,15 +512,7 @@ object Pipeline {
     // screenStreamExact — a stateless stream-static join, so the
     // materialized stream output hash-matches dd_incremental_exact's
     // batch oracle VERBATIM for any micro-batch split.
-    QuerySpec.sql("stream_dedup_screen",
-      """WITH store AS (SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
-        |                      min(doc_id) AS canonical_id
-        |               FROM documents WHERE doc_id % 10 <> 0 GROUP BY 1),
-        |b AS (SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
-        |      FROM documents WHERE doc_id % 10 = 0)
-        |SELECT b.doc_id, CAST(s.canonical_id IS NULL AS BIGINT) AS is_new,
-        |       s.canonical_id
-        |FROM b LEFT JOIN store s USING (fp) ORDER BY doc_id""") {
+    QuerySpec.sql("stream_dedup_screen", TrainingData.IncrementalExactSql) {
       (s, dir) => {
         val store = graft.ops.Dedup.exact(
           Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
@@ -579,23 +597,7 @@ object Pipeline {
     // here driver-checked against q_funnel_steps' oracle verbatim). The
     // steps spine left-join keeps zero-reacher steps in the output, the
     // batch aggregate's shape on any input including an empty corpus.
-    QuerySpec.sql("stream_funnel",
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-        |s1 AS (SELECT user_id, min(us) AS t FROM e
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(e.us) AS t, min(s1.t) AS t_prev
-        |       FROM e JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'click' AND e.us > s1.t GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(e.us) AS t, min(s2.t) AS t_prev
-        |       FROM e JOIN s2 ON e.user_id = s2.user_id
-        |       WHERE e.event_type = 'purchase' AND e.us > s2.t GROUP BY e.user_id)
-        |SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
-        |       CAST(count(*) AS BIGINT) AS n_users, CAST(0 AS BIGINT) AS total_lag_us FROM s1
-        |UNION ALL
-        |SELECT 2, 'click', count(*), CAST(coalesce(sum(t - t_prev), 0) AS BIGINT) FROM s2
-        |UNION ALL
-        |SELECT 3, 'purchase', count(*), CAST(coalesce(sum(t - t_prev), 0) AS BIGINT) FROM s3
-        |ORDER BY step""") {
+    QuerySpec.sql("stream_funnel", FunnelStepsSql) {
       (s, dir) => {
         import s.implicits._
         val steps = Seq("view", "click", "purchase")
@@ -622,16 +624,7 @@ object Pipeline {
     // append-only hit per first (user, period) activity; grouping the hits
     // by (cohort, offset) reproduces the batch cohort matrix exactly, so
     // this hash-matches q_retention_cohorts' oracle verbatim.
-    QuerySpec.sql("stream_retention",
-      """WITH a AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS dd FROM events),
-        |c AS (SELECT user_id, min(dd) AS cohort_dd FROM a GROUP BY user_id),
-        |x AS (SELECT DISTINCT c.cohort_dd, (a.dd - c.cohort_dd) // 7 AS offset_periods,
-        |                      a.user_id
-        |      FROM a JOIN c ON a.user_id = c.user_id)
-        |SELECT strftime(make_timestamp(cohort_dd * 86400000000), '%Y-%m-%d') AS cohort_day,
-        |       offset_periods, CAST(count(*) AS BIGINT) AS n_users
-        |FROM x GROUP BY cohort_dd, offset_periods
-        |ORDER BY cohort_day, offset_periods""") {
+    QuerySpec.sql("stream_retention", RetentionCohortsSql) {
       (s, dir) => {
         import s.implicits._
         val typed = Ingest.streamEvents(s, dir)
@@ -661,17 +654,7 @@ object Pipeline {
     // join exactly). The aggregation to the oracle shape happens on the
     // materialized static table (the stream_funnel convention), so this
     // hash-matches q_attribution_window's oracle verbatim.
-    QuerySpec.sql("stream_interval_join",
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-        |                  CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |p AS (SELECT event_id AS purchase_id, user_id, us AS end_us,
-        |             us - 1800000000 AS start_us
-        |      FROM e WHERE event_type = 'purchase')
-        |SELECT purchase_id, CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(e.cents) AS BIGINT) AS cents_total, max(e.us) AS last_us
-        |FROM p JOIN e ON e.user_id = p.user_id
-        |              AND e.us >= p.start_us AND e.us < p.end_us
-        |GROUP BY 1 ORDER BY purchase_id""") {
+    QuerySpec.sql("stream_interval_join", AttributionWindowSql) {
       (s, dir) => {
         def src() = Ingest.streamEvents(s, dir)
         // Time-bin equi-key on BOTH sides (r20 optimization, guide §2.5/§3):
@@ -799,15 +782,15 @@ object Pipeline {
         val canonical = staged(ranked.filter(col("__rn") === 1), 0L)
         val replays = staged(ranked.filter(col("__rn") > 1), 0L)
           .unionByName(staged(ranked, 1000000L))
-        // tagged staging path + sink name (r18 verdict #1): same race
-        // class the sketch folds closed in r18 — fixed paths/names would
-        // collide across concurrent different-corpus executions
-        val tag = stagingTag(dir)
-        val inDir = s"target/stream_dedup_watermark_in_$tag"
-        val in = Ingest.stageOrderedFiles(s, Seq(canonical, replays), inDir)
+        // tagged staging path + sink name (Ingest.stagingTag): fixed
+        // paths/names would collide across concurrent different-corpus
+        // executions
+        val (in, inDir) = Ingest.staged(s, "stream_dedup_watermark", dir,
+          Seq(canonical, replays))
         val out = Ingest.drainToMemory(
             graft.streaming.StreamOps.dedupExactStream(in, "30 days"),
-            s"graft_stream_dedup_wm_$tag", stateInput = Seq(inDir))
+            s"graft_stream_dedup_wm_${Ingest.stagingTag(dir)}",
+            stateInput = Seq(inDir))
           .select(col("fp"), col("doc_id").as("canonical_id"))
           .orderBy(col("fp"))
         require(!out.isEmpty || Tables.documents(s, dir).isEmpty,
@@ -863,14 +846,14 @@ object Pipeline {
         val wmDriver = ev.agg(max(col("event_timestamp")).as("event_timestamp"))
           .filter(col("event_timestamp").isNotNull)
           .select(lit("~wm").as("location"), col("event_timestamp"))
-        // tagged staging path + sink name (r18 verdict #1), as above
-        val tag = stagingTag(dir)
-        val inDir = s"target/stream_sessionize_in_$tag"
-        val in = Ingest.stageOrderedFiles(s, Seq(ev, wmDriver), inDir)
+        // tagged staging path + sink name, as above
+        val (in, inDir) = Ingest.staged(s, "stream_sessionize", dir,
+          Seq(ev, wmDriver))
         val out = Ingest.drainToMemory(
             graft.streaming.StreamOps.sessionizeStream(in,
               gapMinutes = 480, watermarkDelay = "4 hours"),
-            s"graft_stream_sessionize_$tag", stateInput = Seq(inDir))
+            s"graft_stream_sessionize_${Ingest.stagingTag(dir)}",
+            stateInput = Seq(inDir))
           .filter(col("location") =!= "~wm")
           .select(col("location"), col("session_start_us"),
             col("session_end_us"), col("n_events"))
@@ -1251,10 +1234,9 @@ object Pipeline {
     // k=32 puts every sf0.01 language on the ESTIMATOR path while small
     // groups (sf0.001, empty) exercise the exact-count branch.
     QuerySpec.sql("sketch_kmv_distinct",
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT DISTINCT lang,
-        |         list_reduce(list_transform(string_split(substr(md5(text), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+        |         ${hexKeySql("text")} AS hk
         |  FROM documents WHERE text IS NOT NULL),
         |b AS (SELECT lang, hk, row_number() OVER (PARTITION BY lang ORDER BY hk) AS rn FROM h),
         |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_kept, max(hk) AS kth_hash
@@ -1274,10 +1256,9 @@ object Pipeline {
     // 100 TB pipeline uses to answer any pairwise overlap from per-part
     // sketches without re-touching the corpus.
     QuerySpec.sql("sketch_kmv_overlap",
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT DISTINCT event_type AS part,
-        |         list_reduce(list_transform(string_split(substr(md5(user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+        |         ${hexKeySql("user_id::VARCHAR")} AS hk
         |  FROM events WHERE user_id IS NOT NULL),
         |b AS (SELECT part, hk, row_number() OVER (PARTITION BY part ORDER BY hk) AS rn FROM h),
         |sk AS (SELECT part, hk FROM b WHERE rn <= 64),
@@ -1324,10 +1305,9 @@ object Pipeline {
     // algebra digit-for-digit — a frame shift, a lost re-cut, or a pair
     // row on a one-sided day all hash-fail.
     QuerySpec.sql("sketch_kmv_overlap_sliding",
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT DISTINCT event_type AS part, CAST(ts AS DATE) AS day,
-        |         list_reduce(list_transform(string_split(substr(md5(user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+        |         ${hexKeySql("user_id::VARCHAR")} AS hk
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |b AS (SELECT part, day, hk, row_number() OVER (PARTITION BY part, day ORDER BY hk) AS rn FROM h),
         |dsk AS (SELECT part, day, hk FROM b WHERE rn <= 64),
@@ -1377,19 +1357,7 @@ object Pipeline {
     // mergeability identity (SketchesSpec) the two are EQUAL, so the
     // driver gate checks the identity itself end-to-end — a merge bug
     // (multiset union, a dropped group, a mis-cut) hash-fails here.
-    QuerySpec.sql("sketch_kmv_merge",
-      """WITH h AS (
-        |  SELECT DISTINCT event_type AS part,
-        |         list_reduce(list_transform(string_split(substr(md5(user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
-        |  FROM events WHERE user_id IS NOT NULL),
-        |b AS (SELECT part, hk, row_number() OVER (PARTITION BY part ORDER BY hk) AS rn FROM h),
-        |g AS (SELECT part, CAST(count(*) AS BIGINT) AS n_kept, max(hk) AS kth_hash
-        |      FROM b WHERE rn <= 64 GROUP BY part)
-        |SELECT part, n_kept, kth_hash,
-        |       CASE WHEN n_kept < 64 THEN n_kept
-        |            ELSE (63 * 4294967296) // kth_hash END AS est_distinct
-        |FROM g ORDER BY part""") {
+    QuerySpec.sql("sketch_kmv_merge", KmvMergeSql) {
       (s, dir) => {
         val ev = Tables.events(s, dir)
         val store = Sketches.kmvSketch(
@@ -1416,42 +1384,21 @@ object Pipeline {
     // the way sketch_kmv_merge checks a single merge. Idempotence under
     // batch retry is the sketch algebra's (set semantics), pinned in
     // SketchesSpec.
-    QuerySpec.sql("stream_kmv_update",
-      """WITH h AS (
-        |  SELECT DISTINCT event_type AS part,
-        |         list_reduce(list_transform(string_split(substr(md5(user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
-        |  FROM events WHERE user_id IS NOT NULL),
-        |b AS (SELECT part, hk, row_number() OVER (PARTITION BY part ORDER BY hk) AS rn FROM h),
-        |g AS (SELECT part, CAST(count(*) AS BIGINT) AS n_kept, max(hk) AS kth_hash
-        |      FROM b WHERE rn <= 64 GROUP BY part)
-        |SELECT part, n_kept, kth_hash,
-        |       CASE WHEN n_kept < 64 THEN n_kept
-        |            ELSE (63 * 4294967296) // kth_hash END AS est_distinct
-        |FROM g ORDER BY part""") {
+    QuerySpec.sql("stream_kmv_update", KmvMergeSql) {
       (s, dir) => {
         val ev = Tables.events(s, dir)
         val stages = (0 to 3).map(r =>
           ev.filter(col("event_id") % 4 === r)
             .select(col("event_type"), col("user_id")))
-        // staging/store paths derive from the corpus dir (ADVICE r17):
-        // two concurrent executions against different corpora no longer
-        // race on shared target/ directories
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_kmv_update_in_$tag")
         // cold replay: fresh store (a warm start resuming a prior store is
         // the helper's contract — SketchesSpec pins it; the registry
         // surface pins the cold four-batch fold against the corpus)
-        val storeDir = s"target/stream_kmv_update_store_$tag"
-        Ingest.deleteRecursively(storeDir)
-        val q = graft.streaming.StreamOps.kmvUpdateStream(in,
-            "event_type", "user_id", k = 64, storeDir)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val storeDir = Ingest.foldStaged(s, "stream_kmv_update", dir, stages) {
+          (in, dst) => graft.streaming.StreamOps.kmvUpdateStream(in,
+            "event_type", "user_id", k = 64, dst)
+        }
         val out = Sketches.kmvEstimates(
-            graft.streaming.StreamOps.kmvStoreRead(s, storeDir), k = 64)
+            graft.streaming.StreamOps.sketchStoreRead(s, storeDir), k = 64)
           .select(col("event_type").as("part"), col("n_kept"),
             col("kth_hash"), col("est_distinct"))
           .orderBy(col("part"))
@@ -1479,44 +1426,24 @@ object Pipeline {
     // compaction bug that deletes the live version, resurrects a stale
     // one, or races the fold hash-fails here. The query also pins the
     // retention effect itself: exactly one committed version remains.
-    QuerySpec.sql("stream_kmv_compacted",
-      """WITH h AS (
-        |  SELECT DISTINCT event_type AS part,
-        |         list_reduce(list_transform(string_split(substr(md5(user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
-        |  FROM events WHERE user_id IS NOT NULL),
-        |b AS (SELECT part, hk, row_number() OVER (PARTITION BY part ORDER BY hk) AS rn FROM h),
-        |g AS (SELECT part, CAST(count(*) AS BIGINT) AS n_kept, max(hk) AS kth_hash
-        |      FROM b WHERE rn <= 64 GROUP BY part)
-        |SELECT part, n_kept, kth_hash,
-        |       CASE WHEN n_kept < 64 THEN n_kept
-        |            ELSE (63 * 4294967296) // kth_hash END AS est_distinct
-        |FROM g ORDER BY part""") {
+    QuerySpec.sql("stream_kmv_compacted", KmvMergeSql) {
       (s, dir) => {
         val ev = Tables.events(s, dir)
         val stages = (0 to 3).map(r =>
           ev.filter(col("event_id") % 4 === r)
             .select(col("event_type"), col("user_id")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_kmv_compacted_in_$tag")
-        val storeDir = s"target/stream_kmv_compacted_store_$tag"
-        Ingest.deleteRecursively(storeDir)
-        val q = graft.streaming.StreamOps.kmvUpdateStream(in,
-            "event_type", "user_id", k = 64, storeDir, compactKeepLast = 1)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val storeDir = Ingest.foldStaged(s, "stream_kmv_compacted", dir, stages) {
+          (in, dst) => graft.streaming.StreamOps.kmvUpdateStream(in,
+            "event_type", "user_id", k = 64, dst, compactKeepLast = 1)
+        }
         // retention pin: four folds ran, but only the newest committed
-        // version survives (local listing is fine — scratch is target/)
-        val live = Option(new java.io.File(storeDir).listFiles).toSeq.flatten
-          .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-            new java.io.File(f, "_SUCCESS").isFile)
+        // version survives
+        val live = graft.streaming.StreamOps.sketchStoreVersions(s, storeDir)
         require(live.size <= 1,
           s"stream_kmv_compacted left ${live.size} committed versions " +
             s"under $storeDir; compaction (keepLast=1) should leave 1")
         val out = Sketches.kmvEstimates(
-            graft.streaming.StreamOps.kmvStoreRead(s, storeDir), k = 64)
+            graft.streaming.StreamOps.sketchStoreRead(s, storeDir), k = 64)
           .select(col("event_type").as("part"), col("n_kept"),
             col("kth_hash"), col("est_distinct"))
           .orderBy(col("part"))
@@ -1537,25 +1464,7 @@ object Pipeline {
     // oracle computes the whole-corpus sketch directly — the driver gate
     // checks the mergeability identity end-to-end, then the integer
     // order-statistic arithmetic picks p25/p50/p75/p99.
-    QuerySpec.sql("sketch_kmv_quantiles",
-      """WITH h AS (
-        |  SELECT DISTINCT event_type AS part,
-        |         (hk % 2147483648) * 4294967296
-        |           + (CAST(floor(value * 100) AS BIGINT) + 2147483648) AS pk
-        |  FROM (SELECT event_type, value,
-        |               list_reduce(list_transform(string_split(substr(md5(event_id::VARCHAR), 1, 8), ''),
-        |                 c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
-        |        FROM events WHERE event_id IS NOT NULL AND value IS NOT NULL)),
-        |b AS (SELECT part, pk, row_number() OVER (PARTITION BY part ORDER BY pk) AS rn FROM h),
-        |sk AS (SELECT part, pk % 4294967296 - 2147483648 AS v FROM b WHERE rn <= 128),
-        |o AS (SELECT part, v, row_number() OVER (PARTITION BY part ORDER BY v) AS vr,
-        |             count(*) OVER (PARTITION BY part) AS n FROM sk)
-        |SELECT part, CAST(max(n) AS BIGINT) AS n_kept,
-        |       CAST(max(CASE WHEN vr = (25 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p25_cents,
-        |       CAST(max(CASE WHEN vr = (50 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p50_cents,
-        |       CAST(max(CASE WHEN vr = (75 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p75_cents,
-        |       CAST(max(CASE WHEN vr = (99 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p99_cents
-        |FROM o GROUP BY part ORDER BY part""") {
+    QuerySpec.sql("sketch_kmv_quantiles", KmvQuantilesSql) {
       (s, dir) => {
         val ev = Tables.events(s, dir)
         val cents = floor(col("value") * lit(100)).cast("long")
@@ -1583,26 +1492,7 @@ object Pipeline {
     // sketch directly and reads the same probe set: the driver gate
     // checks the merge identity AND the min-over-d point reads
     // end-to-end.
-    QuerySpec.sql("sketch_cms_freq",
-      """WITH d4 AS (SELECT unnest([0, 1, 2, 3]) AS d),
-        |cells AS (
-        |  SELECT event_type AS part, d,
-        |         list_reduce(list_transform(string_split(substr(md5('cms' || d::VARCHAR || '|' || user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 1024 AS bucket,
-        |         CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events CROSS JOIN d4 WHERE user_id IS NOT NULL
-        |  GROUP BY 1, 2, 3),
-        |probes AS (SELECT DISTINCT event_type AS part, user_id
-        |           FROM events WHERE user_id IS NOT NULL AND user_id % 10 = 0),
-        |pc AS (
-        |  SELECT p.part, p.user_id, d,
-        |         list_reduce(list_transform(string_split(substr(md5('cms' || d::VARCHAR || '|' || p.user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 1024 AS bucket
-        |  FROM probes p CROSS JOIN d4)
-        |SELECT pc.part, pc.user_id, min(coalesce(c.cnt, 0)) AS est_cnt
-        |FROM pc LEFT JOIN cells c
-        |  ON c.part = pc.part AND c.d = pc.d AND c.bucket = pc.bucket
-        |GROUP BY 1, 2 ORDER BY pc.part, pc.user_id""") {
+    QuerySpec.sql("sketch_cms_freq", CmsFreqSql) {
       (s, dir) => {
         val ev = Tables.events(s, dir)
         def half(rem: Int) = Sketches.cmsSketch(
@@ -1630,10 +1520,9 @@ object Pipeline {
     // checks the whole daily-store → sliding-union path end-to-end.
     // Epoch-day range frame: calendar gaps window correctly.
     QuerySpec.sql("sketch_kmv_sliding",
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT DISTINCT event_type AS part, CAST(ts AS DATE) AS day,
-        |         list_reduce(list_transform(string_split(substr(md5(user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+        |         ${hexKeySql("user_id::VARCHAR")} AS hk
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |days AS (SELECT DISTINCT part, day FROM h),
         |j AS (SELECT DISTINCT d.part, d.day, h.hk
@@ -1668,41 +1557,16 @@ object Pipeline {
     // store version IS the batch). Same probe reads and whole-corpus
     // oracle as sketch_cms_freq: the driver gate hash-checks the
     // streaming fold end-to-end.
-    QuerySpec.sql("stream_cms_update",
-      """WITH d4 AS (SELECT unnest([0, 1, 2, 3]) AS d),
-        |cells AS (
-        |  SELECT event_type AS part, d,
-        |         list_reduce(list_transform(string_split(substr(md5('cms' || d::VARCHAR || '|' || user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 1024 AS bucket,
-        |         CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events CROSS JOIN d4 WHERE user_id IS NOT NULL
-        |  GROUP BY 1, 2, 3),
-        |probes AS (SELECT DISTINCT event_type AS part, user_id
-        |           FROM events WHERE user_id IS NOT NULL AND user_id % 10 = 0),
-        |pc AS (
-        |  SELECT p.part, p.user_id, d,
-        |         list_reduce(list_transform(string_split(substr(md5('cms' || d::VARCHAR || '|' || p.user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 1024 AS bucket
-        |  FROM probes p CROSS JOIN d4)
-        |SELECT pc.part, pc.user_id, min(coalesce(c.cnt, 0)) AS est_cnt
-        |FROM pc LEFT JOIN cells c
-        |  ON c.part = pc.part AND c.d = pc.d AND c.bucket = pc.bucket
-        |GROUP BY 1, 2 ORDER BY pc.part, pc.user_id""") {
+    QuerySpec.sql("stream_cms_update", CmsFreqSql) {
       (s, dir) => {
         val ev = Tables.events(s, dir)
         val stages = (0 to 3).map(r =>
           ev.filter(col("event_id") % 4 === r)
             .select(col("event_type"), col("user_id")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_cms_update_in_$tag")
-        val storeDir = s"target/stream_cms_update_store_$tag"
-        Ingest.deleteRecursively(storeDir)
-        val q = graft.streaming.StreamOps.cmsUpdateStream(in,
-            "event_type", "user_id", depth = 4, width = 1024, storeDir)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val storeDir = Ingest.foldStaged(s, "stream_cms_update", dir, stages) {
+          (in, dst) => graft.streaming.StreamOps.cmsUpdateStream(in,
+            "event_type", "user_id", depth = 4, width = 1024, dst)
+        }
         val store = graft.streaming.StreamOps.sketchStoreRead(s, storeDir)
         val probes = ev
           .filter(col("user_id").isNotNull && col("user_id") % 10 === 0)
@@ -1739,44 +1603,20 @@ object Pipeline {
     // the refreshed store's order statistics are hash-checked against
     // the whole-corpus sketch (the mergeability identity — same oracle
     // as sketch_kmv_quantiles). If the seam ever diverges, this fails.
-    QuerySpec.sql("stream_quantile_update",
-      """WITH h AS (
-        |  SELECT DISTINCT event_type AS part,
-        |         (hk % 2147483648) * 4294967296
-        |           + (CAST(floor(value * 100) AS BIGINT) + 2147483648) AS pk
-        |  FROM (SELECT event_type, value,
-        |               list_reduce(list_transform(string_split(substr(md5(event_id::VARCHAR), 1, 8), ''),
-        |                 c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
-        |        FROM events WHERE event_id IS NOT NULL AND value IS NOT NULL)),
-        |b AS (SELECT part, pk, row_number() OVER (PARTITION BY part ORDER BY pk) AS rn FROM h),
-        |sk AS (SELECT part, pk % 4294967296 - 2147483648 AS v FROM b WHERE rn <= 128),
-        |o AS (SELECT part, v, row_number() OVER (PARTITION BY part ORDER BY v) AS vr,
-        |             count(*) OVER (PARTITION BY part) AS n FROM sk)
-        |SELECT part, CAST(max(n) AS BIGINT) AS n_kept,
-        |       CAST(max(CASE WHEN vr = (25 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p25_cents,
-        |       CAST(max(CASE WHEN vr = (50 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p50_cents,
-        |       CAST(max(CASE WHEN vr = (75 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p75_cents,
-        |       CAST(max(CASE WHEN vr = (99 * (n - 1)) // 100 + 1 THEN v END) AS BIGINT) AS p99_cents
-        |FROM o GROUP BY part ORDER BY part""") {
+    QuerySpec.sql("stream_quantile_update", KmvQuantilesSql) {
       (s, dir) => {
         val ev = Tables.events(s, dir)
         val stages = (0 to 3).map(r =>
           ev.filter(col("event_id") % 4 === r)
             .select(col("event_type"), col("event_id"), col("value")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_quantile_update_in_$tag")
-        val storeDir = s"target/stream_quantile_update_store_$tag"
-        Ingest.deleteRecursively(storeDir)
         val cents = floor(col("value") * lit(100)).cast("long")
-        val q = graft.streaming.StreamOps.sketchUpdateStream(in, storeDir,
+        val storeDir = Ingest.foldStaged(s, "stream_quantile_update", dir, stages) {
+          (in, dst) => graft.streaming.StreamOps.sketchUpdateStream(in, dst,
             b => Sketches.kmvQuantileSketch(b, "event_type", "event_id",
               cents, k = 128),
             (store, b) =>
               Sketches.kmvMergeSketches(store, b, "event_type", k = 128))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        }
         val out = Sketches.kmvQuantiles(
             graft.streaming.StreamOps.sketchStoreRead(s, storeDir),
             "event_type", Seq(25, 50, 75, 99))
@@ -1802,11 +1642,10 @@ object Pipeline {
     // read path end-to-end (gap days covered: January has none, but the
     // date-anchored join is spec-pinned against a gapped corpus).
     QuerySpec.sql("sketch_cms_sliding",
-      """WITH d3 AS (SELECT unnest([0, 1, 2]) AS d),
+      s"""WITH d3 AS (SELECT unnest([0, 1, 2]) AS d),
         |cells AS (
         |  SELECT event_type AS part, CAST(ts AS DATE) AS day, d,
-        |         list_reduce(list_transform(string_split(substr(md5('cms' || d::VARCHAR || '|' || user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 256 AS bucket,
+        |         ${hexKeySql("'cms' || d::VARCHAR || '|' || user_id::VARCHAR")} % 256 AS bucket,
         |         CAST(count(*) AS BIGINT) AS cnt
         |  FROM events CROSS JOIN d3
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
@@ -1821,8 +1660,7 @@ object Pipeline {
         |           FROM events WHERE user_id IS NOT NULL AND user_id % 20 = 0),
         |pc AS (
         |  SELECT p.part, p.user_id, d,
-        |         list_reduce(list_transform(string_split(substr(md5('cms' || d::VARCHAR || '|' || p.user_id::VARCHAR), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 256 AS bucket
+        |         ${hexKeySql("'cms' || d::VARCHAR || '|' || p.user_id::VARCHAR")} % 256 AS bucket
         |  FROM probes p CROSS JOIN d3),
         |grid AS (SELECT dy.part, dy.day, pc.user_id, pc.d, pc.bucket
         |         FROM days dy JOIN pc ON pc.part = dy.part)
@@ -1857,13 +1695,12 @@ object Pipeline {
     // identity, which the oracle computes), then per-(group, day)
     // integer order statistics.
     QuerySpec.sql("sketch_quantiles_sliding",
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT DISTINCT event_type AS part, CAST(ts AS DATE) AS day,
         |         (hk % 2147483648) * 4294967296
         |           + (CAST(floor(value * 100) AS BIGINT) + 2147483648) AS pk
         |  FROM (SELECT event_type, ts, value,
-        |               list_reduce(list_transform(string_split(substr(md5(event_id::VARCHAR), 1, 8), ''),
-        |                 c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+        |               ${hexKeySql("event_id::VARCHAR")} AS hk
         |        FROM events
         |        WHERE event_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL)),
         |days AS (SELECT DISTINCT part, day FROM h),
@@ -1967,18 +1804,12 @@ object Pipeline {
         val stages = (0 to 3).map(r =>
           ev.filter(col("event_id") % 4 === r)
             .select(col("event_type"), col("vbucket")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_topk_update_in_$tag")
-        val storeDir = s"target/stream_topk_update_store_$tag"
-        Ingest.deleteRecursively(storeDir)
-        val q = graft.streaming.StreamOps.sketchUpdateStream(in, storeDir,
+        val storeDir = Ingest.foldStaged(s, "stream_topk_update", dir, stages) {
+          (in, dst) => graft.streaming.StreamOps.sketchUpdateStream(in, dst,
             b => Sketches.mgSummary(b, "event_type", "vbucket", k = 16),
             (store, b) => Sketches.mgMerge(store, b, "event_type", k = 16),
             versionByBatchId = true)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        }
         val store = graft.streaming.StreamOps.sketchStoreRead(s, storeDir)
         // plumbing guard on the STORE (review r18): mgTopK is
         // legitimately empty when every group's counters prune away
@@ -2238,23 +2069,14 @@ object Pipeline {
         val stages = (0 to 3).map(r =>
           vecs.filter(col("vec_id") % 4 === r)
             .select(col("vec_id"), col("embedding")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_ivf_index_in_$tag")
-        val storeDir = s"target/stream_ivf_index_store_$tag"
-        Ingest.deleteRecursively(storeDir)
         try {
-          val q = graft.streaming.StreamOps.ivfIndexUpdateStream(in, cents,
-              storeDir, compactKeepLast = 2)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          val storeDir = Ingest.foldStaged(s, "stream_ivf_index", dir, stages) {
+            (in, dst) => graft.streaming.StreamOps.ivfIndexUpdateStream(in, cents,
+              dst, compactKeepLast = 2)
+          }
           // retention pin: four folds, keepLast = 2 → exactly two
-          // committed versions survive (local listing — scratch is target/)
-          val live = Option(new java.io.File(storeDir).listFiles).toSeq
-            .flatten
-            .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-              new java.io.File(f, "_SUCCESS").isFile)
+          // committed versions survive
+          val live = graft.streaming.StreamOps.sketchStoreVersions(s, storeDir)
           require(live.size <= 2,
             s"stream_ivf_index_update left ${live.size} committed " +
               s"versions under $storeDir; compaction (keepLast=2) should leave 2")
@@ -2318,17 +2140,11 @@ object Pipeline {
           vecs.filter(col("vec_id") % 7 === 0)
             .select(col("vec_id"), col("embedding"),
               lit("delete").as("op")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_ivf_upsert_in_$tag")
-        val storeDir = s"target/stream_ivf_upsert_store_$tag"
-        Ingest.deleteRecursively(storeDir)
         try {
-          val q = graft.streaming.StreamOps.ivfIndexUpsertStream(in, cents,
-              storeDir, compactKeepLast = 1)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          val storeDir = Ingest.foldStaged(s, "stream_ivf_upsert", dir, stages) {
+            (in, dst) => graft.streaming.StreamOps.ivfIndexUpsertStream(in, cents,
+              dst, compactKeepLast = 1)
+          }
           val store = graft.streaming.StreamOps.sketchStoreRead(s, storeDir)
           require(!store.isEmpty || vecs.filter(col("vec_id") % 7 =!= 0).isEmpty,
             s"stream_ivf_index_upsert folded an empty index from $dir " +
@@ -2388,17 +2204,11 @@ object Pipeline {
         val stages = (0 to 3).map(r =>
           vecs.filter(col("vec_id") % 4 === r)
             .select(col("vec_id"), col("embedding")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_ivf_search_in_$tag")
-        val storeDir = s"target/stream_ivf_search_store_$tag"
-        Ingest.deleteRecursively(storeDir)
         try {
-          val q = graft.streaming.StreamOps.ivfIndexUpdateStream(in, cents,
-              storeDir, compactKeepLast = 2)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          val storeDir = Ingest.foldStaged(s, "stream_ivf_search", dir, stages) {
+            (in, dst) => graft.streaming.StreamOps.ivfIndexUpdateStream(in, cents,
+              dst, compactKeepLast = 2)
+          }
           val index = graft.streaming.StreamOps.sketchStoreRead(s, storeDir)
           require(!index.isEmpty || vecs.isEmpty,
             s"stream_ivf_search folded an empty index from $dir but the " +
@@ -2460,17 +2270,11 @@ object Pipeline {
         val stages = (0 to 3).map(r =>
           vecs.filter(col("vec_id") % 4 === r)
             .select(col("vec_id"), col("embedding")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_ivf_hier_in_$tag")
-        val storeDir = s"target/stream_ivf_hier_store_$tag"
-        Ingest.deleteRecursively(storeDir)
         try {
-          val q = graft.streaming.StreamOps.ivfHierIndexUpdateStream(in,
-              coarse, fineT, storeDir, compactKeepLast = 2)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          val storeDir = Ingest.foldStaged(s, "stream_ivf_hier", dir, stages) {
+            (in, dst) => graft.streaming.StreamOps.ivfHierIndexUpdateStream(in,
+              coarse, fineT, dst, compactKeepLast = 2)
+          }
           val store = graft.streaming.StreamOps.sketchStoreRead(s, storeDir)
           require(!store.isEmpty || vecs.isEmpty,
             s"stream_ivf_hier_update folded an empty index from $dir " +
@@ -2545,17 +2349,11 @@ object Pipeline {
         val stages = (0 to 3).map(r =>
           vecs.filter(col("vec_id") % 4 === r)
             .select(col("vec_id"), col("embedding")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_ivf_hier_search_in_$tag")
-        val storeDir = s"target/stream_ivf_hier_search_store_$tag"
-        Ingest.deleteRecursively(storeDir)
         try {
-          val q = graft.streaming.StreamOps.ivfHierIndexUpdateStream(in,
-              coarse, fineT, storeDir, compactKeepLast = 2)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          val storeDir = Ingest.foldStaged(s, "stream_ivf_hier_search", dir, stages) {
+            (in, dst) => graft.streaming.StreamOps.ivfHierIndexUpdateStream(in,
+              coarse, fineT, dst, compactKeepLast = 2)
+          }
           val index = graft.streaming.StreamOps.sketchStoreRead(s, storeDir)
           require(!index.isEmpty || vecs.isEmpty,
             s"stream_ivf_hier_search folded an empty index from $dir but " +
@@ -2603,16 +2401,10 @@ object Pipeline {
                 lit("upsert").as("op"))),
           docs.filter(col("doc_id") % 7 === 0)
             .select(col("doc_id"), col("text"), lit("delete").as("op")))
-        val tag = stagingTag(dir)
-        val in = Ingest.stageOrderedFiles(s, stages,
-          s"target/stream_dedup_upsert_in_$tag")
-        val storeDir = s"target/stream_dedup_upsert_store_$tag"
-        Ingest.deleteRecursively(storeDir)
-        val q = graft.streaming.StreamOps.fingerprintUpsertStream(in,
-            storeDir, compactKeepLast = 1)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val storeDir = Ingest.foldStaged(s, "stream_dedup_upsert", dir, stages) {
+          (in, dst) => graft.streaming.StreamOps.fingerprintUpsertStream(in,
+            dst, compactKeepLast = 1)
+        }
         val store = graft.streaming.StreamOps.sketchStoreRead(s, storeDir)
         require(!store.isEmpty || docs.filter(col("doc_id") % 7 =!= 0).isEmpty,
           s"stream_dedup_upsert folded an empty store from $dir " +

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{Curation, Dedup, EmbeddingSim, Multimodal, Packing, Retrieval, Sampling, TextStats}
+import QuerySpec.hexKeySql
 
 /** Training-data pipeline operators over `documents` / `embeddings`
   * (the beyond-reference capability set: dedup family, similarity search,
@@ -155,6 +156,17 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     (3L, Seq("stream", "window")),
     (4L, Seq("dup")))
 
+  /** The minhash (a, b) coefficient CTE over the shingle relation
+    * `sh(doc_id, s)`: a = hex 1–8 of md5(s) mod p, b = hex 9–16 mod
+    * (p − 1) + 1, p = 2³¹ − 1 — the universal-hash family of
+    * `Dedup.minhashSignature`. Pre-stripped: interpolate as a
+    * `|$MinhashCoeffCte,` line. */
+  private val MinhashCoeffCte: String =
+    s"""ab AS (SELECT doc_id,
+       |         ${hexKeySql("s")} % 2147483647 AS a,
+       |         ${hexKeySql("s", 9)} % 2147483646 + 1 AS b
+       |       FROM sh)""".stripMargin
+
   /** The minhash→LSH→closure CTE chain (shingle → KM signature → bands →
     * verified pairs → symmetric edges → recursive reachability → min-label
     * component), shared by every oracle that consumes the minhash closure.
@@ -162,16 +174,11 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     * header. Mirrors `Dedup.minhashLshComponents(threshold = 0.5)` with
     * 16 hashes / 4 bands. */
   private val MinhashClosureCtes: String =
-    """sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    s"""sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
       |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
       |       FROM sp),
-      |ab AS (SELECT doc_id,
-      |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-      |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-      |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-      |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-      |       FROM sh),
+      |$MinhashCoeffCte,
       |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
       |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
       |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
@@ -424,12 +431,47 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
       |         )) - 1))) AS BIGINT) AS sum_q3
       |       FROM db JOIN model USING (w1, w2) GROUP BY doc_id)""".stripMargin
 
-  /** The md5-derived 32-bit doc_id sample key (Sampling.hashKey) in
-    * DuckDB terms — identical to the inline form the sampling oracles
-    * already use. */
-  private val DocHashKeySql: String =
-    """list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-      |               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y)""".stripMargin
+  /** The oracle of `dd_incremental_exact`, shared by
+    * `dd_incremental_bloom` and `stream_dedup_screen`. */
+  private[queries] val IncrementalExactSql: String =
+    """WITH store AS (SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
+      |                      min(doc_id) AS canonical_id
+      |               FROM documents WHERE doc_id % 10 <> 0 GROUP BY 1),
+      |b AS (SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
+      |      FROM documents WHERE doc_id % 10 = 0)
+      |SELECT b.doc_id, CAST(s.canonical_id IS NULL AS BIGINT) AS is_new,
+      |       s.canonical_id
+      |FROM b LEFT JOIN store s USING (fp) ORDER BY doc_id"""
+
+  /** The oracle of `dd_minhash_lsh`, shared by `dd_minhash_auto`. */
+  private[queries] val MinhashLshSql: String =
+    s"""WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
+      |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
+      |       FROM sp),
+      |$MinhashCoeffCte,
+      |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
+      |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
+      |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
+      |bands AS (SELECT doc_id, b,
+      |            md5(hs[4*b+1]::VARCHAR || ',' || hs[4*b+2]::VARCHAR || ',' || hs[4*b+3]::VARCHAR || ',' || hs[4*b+4]::VARCHAR) AS bkey
+      |          FROM sig CROSS JOIN range(4) r(b)),
+      |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+      |         FROM bands x JOIN bands y ON x.b = y.b AND x.bkey = y.bkey AND x.doc_id < y.doc_id)
+      |SELECT doc_a, doc_b,
+      |       round(len(list_filter(range(16), i -> sa.hs[i+1] = sb.hs[i+1])) / 16.0, 4) AS est_jaccard
+      |FROM cand JOIN sig sa ON sa.doc_id = doc_a JOIN sig sb ON sb.doc_id = doc_b
+      |WHERE len(list_filter(range(16), i -> sa.hs[i+1] = sb.hs[i+1])) / 16.0 >= 0.5
+      |ORDER BY doc_a, doc_b"""
+
+  /** The oracle of `dd_cluster_minhash`, shared by `dd_incremental_cc`. */
+  private[queries] val ClusterMinhashSql: String =
+    s"""WITH RECURSIVE $MinhashClosureCtes
+      |SELECT d.doc_id,
+      |       coalesce(c.component, d.doc_id) AS canonical_id,
+      |       CAST(d.doc_id = coalesce(c.component, d.doc_id) AS BIGINT) AS is_canonical
+      |FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
+      |ORDER BY d.doc_id"""
 
   val all: Seq[QuerySpec] = Seq(
 
@@ -610,16 +652,11 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     },
 
     QuerySpec.sql("t_hashed_tf_neardup",
-      """WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      s"""WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
         |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
+        |$MinhashCoeffCte,
         |hxm AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
         |        FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
         |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hxm GROUP BY 1),
@@ -1315,22 +1352,21 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // of dd_pipeline_canonical): Gopher gates -> exact dedup survivors ->
     // sequence packing, end-to-end in one oracle-pinned query.
     QuerySpec.sql("t_pipeline_curation",
-      """WITH sp AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
+      s"""WITH sp AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
         |keepf AS (SELECT doc_id, text FROM sp
         |          WHERE len(t) >= 40 AND len(t) <= 100000
         |            AND length(replace(text, ' ', '')) >= 3 * len(t)
         |            AND length(replace(text, ' ', '')) <= 10 * len(t)
         |            AND 10 * len(list_filter(t, w -> starts_with(w, '#') OR contains(w, '...'))) <= len(t)
-        |            AND 5 * len(list_filter(t, w -> regexp_matches(w, '\p{L}'))) > 4 * len(t)
+        |            AND 5 * len(list_filter(t, w -> regexp_matches(w, '\\p{L}'))) > 4 * len(t)
         |            AND len(list_filter(t, w -> list_contains(['the', 'a'], w))) >= 2),
         |canon AS (SELECT min(doc_id) AS doc_id FROM (
-        |            SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
+        |            SELECT doc_id, md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp
         |            FROM keepf)
         |          GROUP BY fp),
         |surv AS (SELECT k.doc_id, k.text FROM keepf k JOIN canon USING (doc_id)),
         |s AS (SELECT doc_id,
-        |        list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-        |          c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk,
+        |        ${hexKeySql("doc_id::VARCHAR")} AS hk,
         |        len(string_split(text, ' ')) AS n_tokens
         |      FROM surv),
         |c AS (SELECT doc_id, n_tokens,
@@ -1896,30 +1932,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
           .orderBy(col("doc_a"), col("doc_b"))
     },
 
-    QuerySpec.sql("dd_minhash_lsh",
-      """WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-        |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
-        |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
-        |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
-        |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
-        |bands AS (SELECT doc_id, b,
-        |            md5(hs[4*b+1]::VARCHAR || ',' || hs[4*b+2]::VARCHAR || ',' || hs[4*b+3]::VARCHAR || ',' || hs[4*b+4]::VARCHAR) AS bkey
-        |          FROM sig CROSS JOIN range(4) r(b)),
-        |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |         FROM bands x JOIN bands y ON x.b = y.b AND x.bkey = y.bkey AND x.doc_id < y.doc_id)
-        |SELECT doc_a, doc_b,
-        |       round(len(list_filter(range(16), i -> sa.hs[i+1] = sb.hs[i+1])) / 16.0, 4) AS est_jaccard
-        |FROM cand JOIN sig sa ON sa.doc_id = doc_a JOIN sig sb ON sb.doc_id = doc_b
-        |WHERE len(list_filter(range(16), i -> sa.hs[i+1] = sb.hs[i+1])) / 16.0 >= 0.5
-        |ORDER BY doc_a, doc_b""") {
+    QuerySpec.sql("dd_minhash_lsh", MinhashLshSql) {
       (s, dir) =>
         Dedup.minhashLshPairs(Tables.documents(s, dir), numHashes = 16, bands = 4, threshold = 0.5)
           .select(col("doc_a"), col("doc_b"), round(col("est_jaccard"), 4).as("est_jaccard"))
@@ -1933,30 +1946,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // chain verbatim and any drift in the solver breaks the hash-match.
     // The curve itself (b = t^−r, clamping, recall floor) is unit-pinned
     // in DedupSpec against hand-computed points.
-    QuerySpec.sql("dd_minhash_auto",
-      """WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-        |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
-        |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
-        |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
-        |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
-        |bands AS (SELECT doc_id, b,
-        |            md5(hs[4*b+1]::VARCHAR || ',' || hs[4*b+2]::VARCHAR || ',' || hs[4*b+3]::VARCHAR || ',' || hs[4*b+4]::VARCHAR) AS bkey
-        |          FROM sig CROSS JOIN range(4) r(b)),
-        |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |         FROM bands x JOIN bands y ON x.b = y.b AND x.bkey = y.bkey AND x.doc_id < y.doc_id)
-        |SELECT doc_a, doc_b,
-        |       round(len(list_filter(range(16), i -> sa.hs[i+1] = sb.hs[i+1])) / 16.0, 4) AS est_jaccard
-        |FROM cand JOIN sig sa ON sa.doc_id = doc_a JOIN sig sb ON sb.doc_id = doc_b
-        |WHERE len(list_filter(range(16), i -> sa.hs[i+1] = sb.hs[i+1])) / 16.0 >= 0.5
-        |ORDER BY doc_a, doc_b""") {
+    QuerySpec.sql("dd_minhash_auto", MinhashLshSql) {
       (s, dir) => {
         val plan = Dedup.autoBands(targetJaccard = 1.0 / math.sqrt(2.0),
           maxHashes = 16)
@@ -1975,16 +1965,11 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // Oracle: identical signature/band CTEs over all docs, band-joined
     // batch-side × corpus-side.
     QuerySpec.sql("dd_incremental_minhash",
-      """WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      s"""WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
         |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
+        |$MinhashCoeffCte,
         |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
         |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
         |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
@@ -2016,15 +2001,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // store the exact-dedup stage maintains — one fixed-width row per
     // distinct corpus content. Completes the incremental family next to
     // dd_incremental_minhash (same batch split).
-    QuerySpec.sql("dd_incremental_exact",
-      """WITH store AS (SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
-        |                      min(doc_id) AS canonical_id
-        |               FROM documents WHERE doc_id % 10 <> 0 GROUP BY 1),
-        |b AS (SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
-        |      FROM documents WHERE doc_id % 10 = 0)
-        |SELECT b.doc_id, CAST(s.canonical_id IS NULL AS BIGINT) AS is_new,
-        |       s.canonical_id
-        |FROM b LEFT JOIN store s USING (fp) ORDER BY doc_id""") {
+    QuerySpec.sql("dd_incremental_exact", IncrementalExactSql) {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         Dedup.exactAgainst(
@@ -2042,15 +2019,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // Spark's own BloomFilterAggregate, exposed through
     // functions.BloomSketch; see Dedup.exactAgainstBloom's scaladoc for
     // the 100 TB economics (store collapses to one 8 MiB broadcast row).
-    QuerySpec.sql("dd_incremental_bloom",
-      """WITH store AS (SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
-        |                      min(doc_id) AS canonical_id
-        |               FROM documents WHERE doc_id % 10 <> 0 GROUP BY 1),
-        |b AS (SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
-        |      FROM documents WHERE doc_id % 10 = 0)
-        |SELECT b.doc_id, CAST(s.canonical_id IS NULL AS BIGINT) AS is_new,
-        |       s.canonical_id
-        |FROM b LEFT JOIN store s USING (fp) ORDER BY doc_id""") {
+    QuerySpec.sql("dd_incremental_bloom", IncrementalExactSql) {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         Dedup.exactAgainstBloom(
@@ -2256,13 +2225,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // flag. Oracle = dd_minhash_lsh's pair CTEs closed by the same
     // recursive CTE as dd_cluster_canonical — again closing the all-pairs
     // graph while Spark feeds the contracted edges.
-    QuerySpec.sql("dd_cluster_minhash",
-      s"""WITH RECURSIVE $MinhashClosureCtes
-        |SELECT d.doc_id,
-        |       coalesce(c.component, d.doc_id) AS canonical_id,
-        |       CAST(d.doc_id = coalesce(c.component, d.doc_id) AS BIGINT) AS is_canonical
-        |FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin) {
+    QuerySpec.sql("dd_cluster_minhash", ClusterMinhashSql) {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         Dedup.canonicalizeFrom(docs,
@@ -2276,13 +2239,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // re-clustering. The oracle is deliberately the FULL-recompute closure
     // (identical SQL to dd_cluster_minhash), so the driver's hash-compare
     // IS the incremental ≡ recompute equivalence proof.
-    QuerySpec.sql("dd_incremental_cc",
-      s"""WITH RECURSIVE $MinhashClosureCtes
-        |SELECT d.doc_id,
-        |       coalesce(c.component, d.doc_id) AS canonical_id,
-        |       CAST(d.doc_id = coalesce(c.component, d.doc_id) AS BIGINT) AS is_canonical
-        |FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin) {
+    QuerySpec.sql("dd_incremental_cc", ClusterMinhashSql) {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         val batch = docs.filter(col("doc_id") % 97 === 0)
@@ -2353,16 +2310,11 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // dd_cluster_minhash; the selection is a per-cluster argmax realized
     // as one map-side-combinable max_by aggregate, not a window.
     QuerySpec.sql("dd_keep_best",
-      """WITH RECURSIVE sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      s"""WITH RECURSIVE sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
         |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
+        |$MinhashCoeffCte,
         |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
         |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
         |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
@@ -2402,16 +2354,11 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // listing; the oracle reuses dd_keep_best's closure CTEs with degree
     // replacing n_chars as the argmax key.
     QuerySpec.sql("dd_keep_central",
-      """WITH RECURSIVE sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      s"""WITH RECURSIVE sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
         |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
+        |$MinhashCoeffCte,
         |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
         |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
         |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
@@ -2459,16 +2406,11 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // unrolls the identical rounds (the kmeans/BPE convention), and an
     // edge-less doc is rank 150000 by the same formula on both sides.
     QuerySpec.sql("dd_pagerank",
-      """WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      s"""WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
         |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
+        |$MinhashCoeffCte,
         |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
         |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
         |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
@@ -2567,14 +2509,13 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // content appears in >1 doc — the span-level dedup analysis signal
     // (counts exact integers; coverage one deterministic IEEE division).
     QuerySpec.sql("dd_span_coverage",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk,
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk,
         |                  len(string_split(text, ' ')) AS n FROM documents),
         |p0 AS (SELECT doc_id, unnest(list_transform(range(1, n - 3),
         |        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])) AS s
         |      FROM t),
         |p AS (SELECT doc_id,
-        |        list_reduce(list_transform(string_split(substr(md5(s), 1, 15), ''),
-        |          c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS sk
+        |        ${hexKeySql("s", len = 15)} AS sk
         |      FROM p0),
         |df AS (SELECT sk, count(DISTINCT doc_id) AS df FROM p GROUP BY sk),
         |agg AS (SELECT doc_id, count(*) AS n_spans,
@@ -2598,14 +2539,13 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // Selection is one integer min per frame (hk*2^20 + reversed pos);
     // fp sets match across engines regardless of 0/1-based positions.
     QuerySpec.sql("dd_winnow_pairs",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk,
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk,
         |                  len(string_split(text, ' ')) AS n FROM documents),
         |p0 AS (SELECT doc_id, unnest(list_transform(range(1, n - 2),
         |        i -> {'pos': i, 's': tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3]})) AS u
         |      FROM t),
         |p AS (SELECT doc_id, u.pos AS pos,
-        |        list_reduce(list_transform(string_split(substr(md5(u.s), 1, 10), ''),
-        |          c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+        |        ${hexKeySql("u.s", len = 10)} AS hk
         |      FROM p0 WHERE u.pos <= 1048576),
         |m AS (SELECT doc_id, pos,
         |        min(hk * 1048576 + (1048576 - pos))
@@ -2631,14 +2571,13 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // longest_run_tokens drives the ">= 50-token duplicated run" drop rule
     // without a distributed suffix array.
     QuerySpec.sql("dd_dup_runs",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk,
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk,
         |                  len(string_split(text, ' ')) AS n FROM documents),
         |p0 AS (SELECT doc_id, unnest(list_transform(range(1, n - 3),
         |        i -> {'pos': i, 's': tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4]})) AS u
         |      FROM t),
         |p AS (SELECT doc_id, u.pos AS pos,
-        |        list_reduce(list_transform(string_split(substr(md5(u.s), 1, 15), ''),
-        |          c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS sk
+        |        ${hexKeySql("u.s", len = 15)} AS sk
         |      FROM p0),
         |df AS (SELECT sk, count(DISTINCT doc_id) AS df FROM p GROUP BY sk),
         |dup AS (SELECT doc_id, pos FROM p JOIN df USING (sk) WHERE df >= 2),
@@ -2678,7 +2617,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // near-dup stage never sees duplicate-saturated band buckets — and the
     // oracle rebuilds the same three stages declaratively.
     QuerySpec.sql("dd_pipeline_canonical",
-      """WITH RECURSIVE fpx AS (SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS f FROM documents),
+      s"""WITH RECURSIVE fpx AS (SELECT doc_id, md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS f FROM documents),
         |ex AS (SELECT f, min(doc_id) AS ec FROM fpx GROUP BY f),
         |m AS (SELECT fpx.doc_id, ex.ec FROM fpx JOIN ex USING (f)),
         |surv AS (SELECT d.doc_id, d.text FROM documents d JOIN ex ON d.doc_id = ex.ec),
@@ -2686,12 +2625,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
         |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
+        |$MinhashCoeffCte,
         |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
         |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
         |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
@@ -2728,8 +2662,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // (rate * 2^32).toLong arithmetic the operator uses.
     QuerySpec.sql("sample_stratified_rate",
       s"""WITH h AS (SELECT doc_id, lang,
-        |             list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-        |               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+        |             ${hexKeySql("doc_id::VARCHAR")} AS hk
         |           FROM documents)
         |SELECT doc_id, lang FROM h
         |WHERE hk < CASE lang ${SampleRates.map { case (l, r) =>
@@ -2744,9 +2677,8 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // Fixed quota per stratum: the 30 smallest-hash docs per language —
     // deterministic uniform-without-replacement.
     QuerySpec.sql("sample_stratified_quota",
-      """WITH h AS (SELECT doc_id, lang,
-        |             list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-        |               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+      s"""WITH h AS (SELECT doc_id, lang,
+        |             ${hexKeySql("doc_id::VARCHAR")} AS hk
         |           FROM documents)
         |SELECT doc_id, lang FROM h
         |QUALIFY row_number() OVER (PARTITION BY lang ORDER BY hk ASC, doc_id ASC) <= 30
@@ -2764,9 +2696,8 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // doc_id. The plan is TakeOrderedAndProject (bounded per-partition
     // heaps), never a global sort.
     QuerySpec.sql("sample_weighted_priority",
-      """WITH h AS (SELECT doc_id, lang,
-        |             list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-        |               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk,
+      s"""WITH h AS (SELECT doc_id, lang,
+        |             ${hexKeySql("doc_id::VARCHAR")} AS hk,
         |             CASE lang WHEN 'en' THEN 4 WHEN 'de' THEN 2 WHEN 'es' THEN 2
         |                       WHEN 'fr' THEN 1 WHEN 'zh' THEN 1 ELSE 0 END AS w
         |           FROM documents)
@@ -2789,8 +2720,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // the same value.
     QuerySpec.sql("sample_mix_weights",
       s"""WITH h AS (SELECT doc_id, lang,
-        |             list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-        |               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk,
+        |             ${hexKeySql("doc_id::VARCHAR")} AS hk,
         |             CASE lang ${MixWeights.map { case (l, wt) =>
             s"WHEN '$l' THEN ${wt}::DOUBLE" }.mkString(" ")} ELSE NULL END AS wt
         |           FROM documents),
@@ -2812,9 +2742,8 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // IEEE engine, so the quota floors match DuckDB bit-for-bit (other τ
     // would ride pow, which carries no cross-engine guarantee).
     QuerySpec.sql("sample_mix_temperature",
-      """WITH h AS (SELECT doc_id, lang,
-        |             list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-        |               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk
+      s"""WITH h AS (SELECT doc_id, lang,
+        |             ${hexKeySql("doc_id::VARCHAR")} AS hk
         |           FROM documents),
         |counts AS (SELECT lang, count(*) AS cnt FROM h GROUP BY 1),
         |q AS (SELECT lang, CAST(floor(sqrt(cnt) * (SELECT min(cnt / sqrt(cnt)) FROM counts)) AS BIGINT) AS quota
@@ -2850,7 +2779,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
         |         CAST(CASE WHEN bef * 3 < tot THEN 0
         |                   WHEN bef * 3 < tot * 2 THEN 1 ELSE 2 END AS BIGINT) AS bucket
         |       FROM bk),
-        |g AS (SELECT doc_id, $DocHashKeySql % 1000000 AS gk FROM documents)
+        |g AS (SELECT doc_id, ${hexKeySql("doc_id::VARCHAR")} % 1000000 AS gk FROM documents)
         |SELECT s.doc_id, s.lang, s.avg_bits_x100, bb.bucket,
         |       CAST(CASE WHEN gk < (CASE bb.bucket WHEN 0 THEN 1000000
         |                                           WHEN 1 THEN 500000 ELSE 0 END)
@@ -2869,15 +2798,14 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // log-ratio in the floor-log2 third-bit quantization, per-doc summed
     // weight, deterministic top-100 (weight desc, doc_id asc).
     QuerySpec.sql("sample_dsir",
-      """WITH tk AS (SELECT doc_id, source = 'src0' AS is_t,
+      s"""WITH tk AS (SELECT doc_id, source = 'src0' AS is_t,
         |             string_split(text, ' ') AS t FROM documents),
         |uf AS (SELECT doc_id, is_t, unnest(t) AS f FROM tk),
         |bf AS (SELECT doc_id, is_t, t[i] || ' ' || t[i+1] AS f
         |       FROM (SELECT doc_id, is_t, t, unnest(range(1, len(t))) AS i
         |             FROM tk WHERE len(t) >= 2)),
         |fb AS (SELECT doc_id, is_t,
-        |         list_reduce(list_transform(string_split(substr(md5(f), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 256 AS b
+        |         ${hexKeySql("f")} % 256 AS b
         |       FROM (SELECT doc_id, is_t, f FROM uf
         |             UNION ALL SELECT doc_id, is_t, f FROM bf)),
         |m AS (SELECT b, CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS ct,
@@ -2907,16 +2835,11 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // straddle the train/eval boundary. 90/5/5 over floor(cum·2³²)
     // integer thresholds; singletons hash their own id.
     QuerySpec.sql("sample_split_leakage_safe",
-      """WITH RECURSIVE sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      s"""WITH RECURSIVE sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |         range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
         |       FROM sp),
-        |ab AS (SELECT doc_id,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483647 AS a,
-        |         list_reduce(list_transform(string_split(substr(md5(s), 9, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) % 2147483646 + 1 AS b
-        |       FROM sh),
+        |$MinhashCoeffCte,
         |hx AS (SELECT doc_id, i, min((a + (i+1) * b) % 2147483647) AS h
         |       FROM ab CROSS JOIN range(16) r(i) GROUP BY 1, 2),
         |sig AS (SELECT doc_id, list(h ORDER BY i) AS hs FROM hx GROUP BY 1),
@@ -2936,8 +2859,7 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
         |lab AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS cluster_id
         |        FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id),
         |hb AS (SELECT doc_id, cluster_id,
-        |         list_reduce(list_transform(string_split(substr(md5('42' || CAST(cluster_id AS VARCHAR)), 1, 8), ''),
-        |           c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS h
+        |         ${hexKeySql("'42' || CAST(cluster_id AS VARCHAR)")} AS h
         |       FROM lab)
         |SELECT doc_id, cluster_id,
         |       CASE WHEN h < 3865470566 THEN 'train'
@@ -2957,9 +2879,8 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // oracle computes the same cumsum with one global window (fine at
     // sf0.01; the Spark side never does — see Packing's scaladoc).
     QuerySpec.sql("pack_sequences",
-      """WITH s AS (SELECT doc_id,
-        |             list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-        |               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk,
+      s"""WITH s AS (SELECT doc_id,
+        |             ${hexKeySql("doc_id::VARCHAR")} AS hk,
         |             len(string_split(text, ' ')) AS n_tokens
         |           FROM documents),
         |c AS (SELECT doc_id, n_tokens,
@@ -2980,9 +2901,8 @@ sc AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_scored,
     // docs spanning multiple packs emit one row per pack. The oracle
     // mirrors the arithmetic with range() over the same global cumsum.
     QuerySpec.sql("pack_manifest",
-      """WITH s AS (SELECT doc_id,
-        |             list_reduce(list_transform(string_split(substr(md5(doc_id::VARCHAR), 1, 8), ''),
-        |               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (x, y) -> x * 16 + y) AS hk,
+      s"""WITH s AS (SELECT doc_id,
+        |             ${hexKeySql("doc_id::VARCHAR")} AS hk,
         |             len(string_split(text, ' ')) AS n_tokens
         |           FROM documents),
         |c AS (SELECT doc_id, n_tokens,

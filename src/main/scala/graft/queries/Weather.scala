@@ -38,15 +38,35 @@ object Weather {
     case (c, lo, hi, ll, hl) => s"('$c', $lo, $hi, '$ll', '$hl')"
   }.mkString(", ")
 
+  /** The oracle of `hourly_rollup`, shared by `stream_hourly_rollup`. */
+  private[queries] val HourlyRollupSql: String =
+    """WITH agg AS (
+      |  SELECT CAST(hour(ts) AS INT) AS hour,
+      |         epoch_us(min(ts)) AS window_start_us,
+      |         epoch_us(max(ts)) AS window_end_us,
+      |         count(*) AS n_rows, round(avg(value), 4) AS avg_value
+      |  FROM events GROUP BY 1),
+      |modal AS (
+      |  SELECT hour, event_type AS modal_code, cnt AS modal_count FROM (
+      |    SELECT CAST(hour(ts) AS INT) AS hour, event_type, count(*) AS cnt,
+      |           row_number() OVER (PARTITION BY CAST(hour(ts) AS INT)
+      |             ORDER BY count(*) DESC, event_type ASC) AS rn
+      |    FROM events GROUP BY 1, 2) WHERE rn = 1)
+      |SELECT agg.*, modal.modal_code, modal.modal_count
+      |FROM agg LEFT JOIN modal USING (hour) ORDER BY hour"""
+
+  /** The oracle of `latest_per_key`, shared by `latest_per_key_maxby`. */
+  private[queries] val LatestPerKeySql: String =
+    """SELECT CAST(user_id AS VARCHAR) AS location, event_id,
+      |       event_type AS code, value, epoch_us(ts) AS event_us
+      |FROM events
+      |QUALIFY row_number() OVER (
+      |  PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1"""
+
   val all: Seq[QuerySpec] = Seq(
 
     // D1 — latest observation per location (GET /weather).
-    QuerySpec.sql("latest_per_key",
-      """SELECT CAST(user_id AS VARCHAR) AS location, event_id,
-        |       event_type AS code, value, epoch_us(ts) AS event_us
-        |FROM events
-        |QUALIFY row_number() OVER (
-        |  PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1""") {
+    QuerySpec.sql("latest_per_key", LatestPerKeySql) {
       (s, dir) => Latest.latestPerLocation(obs(s, dir)).select(obsOut: _*)
     },
 
@@ -67,12 +87,7 @@ object Weather {
     // D1 scale variant — same latest-per-location via max_by (map-side
     // combinable hash agg: one row per key per partition crosses the
     // shuffle instead of every row; the plan for low-cardinality hot keys).
-    QuerySpec.sql("latest_per_key_maxby",
-      """SELECT CAST(user_id AS VARCHAR) AS location, event_id,
-        |       event_type AS code, value, epoch_us(ts) AS event_us
-        |FROM events
-        |QUALIFY row_number() OVER (
-        |  PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1""") {
+    QuerySpec.sql("latest_per_key_maxby", LatestPerKeySql) {
       (s, dir) =>
         Latest.latestByMaxBy(obs(s, dir), "location",
             struct(col("event_timestamp"), col("event_id")))
@@ -99,21 +114,7 @@ object Weather {
     },
 
     // A2 + A5/A6 + J1 — hourly rollup with modal code (GET /weather/recent_with_step 24h).
-    QuerySpec.sql("hourly_rollup",
-      """WITH agg AS (
-        |  SELECT CAST(hour(ts) AS INT) AS hour,
-        |         epoch_us(min(ts)) AS window_start_us,
-        |         epoch_us(max(ts)) AS window_end_us,
-        |         count(*) AS n_rows, round(avg(value), 4) AS avg_value
-        |  FROM events GROUP BY 1),
-        |modal AS (
-        |  SELECT hour, event_type AS modal_code, cnt AS modal_count FROM (
-        |    SELECT CAST(hour(ts) AS INT) AS hour, event_type, count(*) AS cnt,
-        |           row_number() OVER (PARTITION BY CAST(hour(ts) AS INT)
-        |             ORDER BY count(*) DESC, event_type ASC) AS rn
-        |    FROM events GROUP BY 1, 2) WHERE rn = 1)
-        |SELECT agg.*, modal.modal_code, modal.modal_count
-        |FROM agg LEFT JOIN modal USING (hour) ORDER BY hour""") {
+    QuerySpec.sql("hourly_rollup", HourlyRollupSql) {
       (s, dir) =>
         Rollup.hourly(obs(s, dir), avgCols = Seq("value"))
           .select(col("hour"),

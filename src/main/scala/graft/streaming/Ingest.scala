@@ -1,9 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 import graft.Tables
 
@@ -21,8 +19,6 @@ import graft.Tables
   * keeping this module's contract (a named queryable table) unchanged.
   */
 object Ingest {
-
-  private val counter = new AtomicLong(0)
 
   /** File-stream a parquet table that may be laid out either as a single
     * file `dir/<table>.parquet` (the driver's testdata layout) or as a
@@ -43,6 +39,20 @@ object Ingest {
     else
       spark.readStream.schema(schema)
         .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+  }
+
+  /** Recursive local delete for staging/store scratch under target/ —
+    * the ONE copy of the helper every staged-replay call site used to
+    * inline. Local-FS only by design: scratch lives under
+    * target/; the sketch STORE listing, which must work on HDFS/S3,
+    * walks via the Hadoop FS API instead
+    * ([[StreamOps.sketchStoreRead]]). */
+  def deleteRecursively(path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    rm(new java.io.File(path))
   }
 
   /** Stage each DataFrame as ONE parquet file under `dir` with strictly
@@ -77,20 +87,6 @@ object Ingest {
     * before subtracting the delay) and a session/window emits iff
     * end_us <= wm_us (inclusive at exact equality). Oracles that replay
     * a staged stream must use exactly this arithmetic. */
-  /** Recursive local delete for staging/store scratch under target/ —
-    * the ONE copy of the helper every staged-replay call site used to
-    * inline (review r18). Local-FS only by design: scratch lives under
-    * target/; the sketch STORE listing, which must work on HDFS/S3,
-    * walks via the Hadoop FS API instead
-    * ([[StreamOps.sketchStoreRead]]). */
-  def deleteRecursively(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
-
   def stageOrderedFiles(spark: SparkSession, stages: Seq[DataFrame],
                         dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -139,6 +135,58 @@ object Ingest {
     val schema = spark.read.parquet(s"$dir/0000.parquet").schema
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
+  }
+
+  /** Per-corpus suffix for every scratch name a bounded replay leaves
+    * behind: the staging and store directories under target/ and the
+    * memory-sink views. Two executions of the same staged-replay query
+    * against DIFFERENT corpora (e.g. the sf0.001 bench warm-up and the
+    * sf0.1 timed run, or a parallelized Verify) must not race on a shared
+    * fixed path. Name + an md5 prefix of the FULL path (a 32-bit
+    * String.hashCode leaves a silent-collision space between
+    * same-basename checkouts; md5's 64 bits here do not).
+    *
+    * CONTRACT: the tag is a pure function of the corpus dir —
+    * deliberately, so reruns against one corpus REPLACE their staging,
+    * store and sink scratch instead of accumulating one copy per
+    * invocation (a benchmark reruns the same query many times). The
+    * corollary is that a given corpus dir must not run the SAME
+    * staged-replay query CONCURRENTLY in one working directory: two such
+    * executions would interleave deleteRecursively/write on the shared
+    * tagged path. The driver contract runs queries sequentially;
+    * parallel harnesses must shard by corpus dir (different dirs never
+    * collide). */
+  def stagingTag(dir: String): String = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    // single-part-identifier-safe (the tag also names memory-sink temp
+    // views, which reject dots as multi-part names): sf0.01 → sf0_01
+    new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9_]", "_") +
+      "_" + md5
+  }
+
+  /** [[stageOrderedFiles]] under `target/<name>_in_<tag>` for corpus
+    * `dir`; returns the staged stream and its staging directory (the
+    * input a stateful drain sizes its state partitions from). */
+  def staged(spark: SparkSession, name: String, dir: String,
+             stages: Seq[DataFrame]): (DataFrame, String) = {
+    val inDir = s"target/${name}_in_${stagingTag(dir)}"
+    (stageOrderedFiles(spark, stages, inDir), inDir)
+  }
+
+  /** One cold staged-replay fold into a versioned store: stage `stages`
+    * ([[staged]]), clear `target/<name>_store_<tag>`, start the writer
+    * `start(stream, storeDir)` builds with an AvailableNow trigger and
+    * block until it drains. Returns the store directory. */
+  def foldStaged(spark: SparkSession, name: String, dir: String,
+                 stages: Seq[DataFrame])(
+      start: (DataFrame, String) => DataStreamWriter[Row]): String = {
+    val (in, _) = staged(spark, name, dir, stages)
+    val storeDir = s"target/${name}_store_${stagingTag(dir)}"
+    deleteRecursively(storeDir)
+    start(in, storeDir).trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    storeDir
   }
 
   /** State-partition count for a BOUNDED streaming replay, derived from
@@ -199,12 +247,13 @@ object Ingest {
     spark.table(name)
   }
 
-  /** Stream `dir`/events.parquet into a fresh named in-memory table and
-    * block until the AvailableNow trigger drains. Returns the normalized
-    * (µs-timestamp) view of the materialized table. */
+  /** Stream `dir`/events.parquet into the in-memory table
+    * `graft_events_stream_<tag>` and block until the AvailableNow trigger
+    * drains. A rerun on the same corpus replaces that table. Returns the
+    * normalized (µs-timestamp) view of the materialized table. */
   def materializeEvents(spark: SparkSession, dir: String): DataFrame =
     Tables.normalizeEventTs(drainToMemory(streamParquet(spark, dir, "events"),
-      s"graft_events_stream_${counter.incrementAndGet()}"))
+      s"graft_events_stream_${stagingTag(dir)}"))
 
   /** FILES-BACKED twin of [[materializeEvents]] — the serve-path table
     * sink at scale (r19 verdict Next #5, closing SURVEY §2.10's own
@@ -236,7 +285,7 @@ object Ingest {
       .trigger(Trigger.AvailableNow())
       .start()
     query.awaitTermination()
-    val name = s"graft_events_files_${counter.incrementAndGet()}"
+    val name = s"graft_events_files_${stagingTag(dir)}"
     spark.read.parquet(outDir).createOrReplaceTempView(name)
     Tables.normalizeEventTs(spark.table(name))
   }

@@ -403,7 +403,7 @@ object StreamOps {
     * VERSIONED parquet store under `storeDir` (v0, v1, ... — each version
     * = bottom-k(previous ∪ batch), sketch-sized rows). The stream itself
     * holds NO Spark state: the store IS the state, queryable mid-stream
-    * by any reader via [[kmvStoreRead]] + [[graft.ops.Sketches.kmvEstimates]]
+    * by any reader via [[sketchStoreRead]] + [[graft.ops.Sketches.kmvEstimates]]
     * and durable across stream restarts (a warm start resumes from the
     * latest version — the `Against` deployment shape).
     *
@@ -772,12 +772,6 @@ object StreamOps {
     spark.read.parquet(s"$storeDir/v$v")
   }
 
-  /** KMV-era name for [[sketchStoreRead]] (the accessor is family-
-    * agnostic — kept for the registry/spec call sites). */
-  def kmvStoreRead(spark: org.apache.spark.sql.SparkSession,
-                   storeDir: String): DataFrame =
-    sketchStoreRead(spark, storeDir)
-
   private def sketchStoreLatest(spark: org.apache.spark.sql.SparkSession,
                                 storeDir: String): Option[Long] =
     sketchStoreVersions(spark, storeDir).sorted.lastOption
@@ -799,8 +793,8 @@ object StreamOps {
     * "no committed sketch store" on a healthy store — keep the setting
     * on wherever the store lands, or swap the marker gate for a
     * transactional table format's own commit log. */
-  private def sketchStoreVersions(spark: org.apache.spark.sql.SparkSession,
-                                  storeDir: String): Seq[Long] = {
+  def sketchStoreVersions(spark: org.apache.spark.sql.SparkSession,
+                          storeDir: String): Seq[Long] = {
     val path = new org.apache.hadoop.fs.Path(storeDir)
     // conf from the CALLER's session, not the SparkSession.active
     // thread-local (review r18): a caller thread with no active session

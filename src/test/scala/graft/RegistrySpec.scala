@@ -16,6 +16,16 @@ class RegistrySpec extends AnyFunSuite with SparkFixture {
     assert(SparkEntry.queries.size >= 40)
   }
 
+  test("a query filter naming an unknown query throws and lists the registry") {
+    assert(SparkEntry.selected(Some("dd_minhash_lsh")).keySet ===
+      Set("dd_minhash_lsh"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("dd_minhash_lsh,dd_minhash_lhs")))
+    assert(e.getMessage.contains("unknown queries: dd_minhash_lhs"))
+    assert(e.getMessage.contains("registry queries: "))
+    assert(e.getMessage.contains("dd_minhash_lsh"))
+  }
+
   test("flagship entry returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -144,7 +144,7 @@ class SketchesSpec extends AnyFunSuite with SparkFixture {
       Sketches.kmvSketch(df, "grp", "key", k).collect()
         .map(r => r.getString(0) ->
           r.getSeq[Long](r.fieldIndex("sk")).toVector).toMap
-    def storeNow() = graft.streaming.StreamOps.kmvStoreRead(spark, storeDir)
+    def storeNow() = graft.streaming.StreamOps.sketchStoreRead(spark, storeDir)
       .collect()
       .map(r => r.getString(0) ->
         r.getSeq[Long](r.fieldIndex("sk")).toVector).toMap
@@ -165,7 +165,7 @@ class SketchesSpec extends AnyFunSuite with SparkFixture {
     // batch changes nothing (set semantics of DISTINCT + array_union)
     val before = storeNow()
     val remerged = Sketches.kmvMergeSketches(
-        graft.streaming.StreamOps.kmvStoreRead(spark, storeDir),
+        graft.streaming.StreamOps.sketchStoreRead(spark, storeDir),
         Sketches.kmvSketch(s4, "grp", "key", k), "grp", k).collect()
       .map(r => r.getString(0) ->
         r.getSeq[Long](r.fieldIndex("sk")).toVector).toMap
@@ -178,11 +178,8 @@ class SketchesSpec extends AnyFunSuite with SparkFixture {
     val k = 16
     val storeDir = "target/test_kmv_compact_store"
     graft.streaming.Ingest.deleteRecursively(storeDir)
-    def committed() = Option(new java.io.File(storeDir).listFiles).toSeq
-      .flatten
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getName.drop(1).toLong).sorted
+    def committed() =
+      graft.streaming.StreamOps.sketchStoreVersions(spark, storeDir).sorted
     def allDirs() = Option(new java.io.File(storeDir).listFiles).toSeq
       .flatten.filter(f => f.isDirectory && f.getName.matches("v\\d+"))
       .map(_.getName.drop(1).toLong).sorted
@@ -205,14 +202,14 @@ class SketchesSpec extends AnyFunSuite with SparkFixture {
         stages.reduce(_ union _), "grp", "key", k).collect()
       .map(r => r.getString(0) ->
         r.getSeq[Long](r.fieldIndex("sk")).toVector).toMap
-    def storeNow() = graft.streaming.StreamOps.kmvStoreRead(spark, storeDir)
+    def storeNow() = graft.streaming.StreamOps.sketchStoreRead(spark, storeDir)
       .collect()
       .map(r => r.getString(0) ->
         r.getSeq[Long](r.fieldIndex("sk")).toVector).toMap
     assert(storeNow() === whole, "compacted store diverged from the whole sketch")
     // read-during-compaction: a reader that pinned the latest version
     // before a further compaction pass still reads it (latest is retained)
-    val pinned = graft.streaming.StreamOps.kmvStoreRead(spark, storeDir)
+    val pinned = graft.streaming.StreamOps.sketchStoreRead(spark, storeDir)
     assert(graft.streaming.StreamOps
       .sketchStoreCompact(spark, storeDir, keepLast = 1) === Seq(2L))
     assert(pinned.collect().nonEmpty, "pinned latest version was deleted")

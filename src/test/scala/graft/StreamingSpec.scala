@@ -85,6 +85,19 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(again.count() === n, "resume re-appended drained input")
   }
 
+  test("rematerializing one corpus replaces its memory-sink table instead of adding one") {
+    import spark.implicits._
+    val dir = "target/test_sink_corpus"
+    Seq((1L, 7L, "view", 1.0, ts(0)), (2L, 7L, "click", 2.0, ts(1)))
+      .toDF("event_id", "user_id", "event_type", "value", "ts")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    def sinks() = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_events_stream")).toSeq
+    sinks().foreach(spark.catalog.dropTempView)
+    (1 to 3).foreach(_ => graft.streaming.Ingest.materializeEvents(spark, dir))
+    assert(sinks().size === 1, s"sink tables left behind: ${sinks()}")
+  }
+
   test("streaming dropDuplicatesWithinWatermark removes replayed events") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
