@@ -6,16 +6,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.LongArrayDot
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions as SQL functions, so `spark.sql("... long_array_dot(a, b)")`
-  * works alongside the Column API. Activate with
+/** SparkSessionExtensions entry point: registers `long_array_dot` as a SQL
+  * function, so `spark.sql("... long_array_dot(a, b)")` works alongside the
+  * Column API. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`.
   *
-  * This is the full extent of custom Catalyst surface the engine needs:
   * SURVEY.md §4 found no rewrite the stock optimizer lacks, so there are no
-  * custom Rules/Strategies — one codegen'd Expression on the similarity hot
-  * path, injected the supported way. */
+  * custom Rules/Strategies. The engine's custom Catalyst surface is the
+  * `graft.functions` package (README "Custom Catalyst surface"): four
+  * codegen'd Expressions (`FastMd5`, `LongArrayDot`, `MinhashSig`,
+  * `HashedTf`), typed Aggregators and `BloomSketch`, all reached through
+  * their Column-API entry points; only `long_array_dot` has SQL callers. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(ext.injectFunction)

@@ -57,19 +57,29 @@ object FastMd5 {
   }
   private val tl = ThreadLocal.withInitial[Ctx](() => new Ctx)
 
+  /** md5 of the byte range `bytes[from, from + len)`, written into the
+    * calling thread's 16-byte scratch and returned: the array is reused by
+    * the thread's next call, so read it before digesting again. The range
+    * form lets the text kernels ([[MinhashSig]], [[HashedTf]]) hash a
+    * token or shingle in place, without building its string. */
+  private[functions] def digest(bytes: Array[Byte], from: Int, len: Int): Array[Byte] = {
+    val c = tl.get()
+    c.md.reset()
+    c.md.update(bytes, from, len)
+    c.md.digest(c.dig, 0, 16)
+    c.dig
+  }
+
   /** md5 of `bytes` as 32 lowercase hex chars. The UTF8String's backing
     * array is freshly allocated per call (UTF8String keeps the reference);
     * the digest object and its 16-byte scratch are per-thread. */
   def hex(bytes: Array[Byte]): UTF8String = {
-    val c = tl.get()
-    c.md.reset()
-    c.md.update(bytes, 0, bytes.length)
-    c.md.digest(c.dig, 0, 16)
+    val dig = digest(bytes, 0, bytes.length)
     val out = new Array[Byte](32)
     var i = 0
     while (i < 16) {
-      out(2 * i) = HEX((c.dig(i) >> 4) & 15)
-      out(2 * i + 1) = HEX(c.dig(i) & 15)
+      out(2 * i) = HEX((dig(i) >> 4) & 15)
+      out(2 * i + 1) = HEX(dig(i) & 15)
       i += 1
     }
     UTF8String.fromBytes(out)

@@ -41,12 +41,12 @@ object Checkpoints {
   /** Spread `df` to the session's default parallelism when its own
     * partition count is below it — otherwise the identity (r20,
     * guide §2.6/§6 input parallelism). The per-row CPU of a tokenize/
-    * shingle/hash explode runs INSIDE the scan stage, and a small corpus
+    * shingle/hash pass runs INSIDE the scan stage, and a small corpus
     * (one parquet file — the verify/bench layout) scans as ONE task, so
     * the whole corpus-sized pass serializes regardless of core count
-    * (measured: the minhash signature's partial aggregate ran 1.1-3.7 s
-    * single-task at sf0.1 local[32] in every dd_* query). The condition
-    * makes it scale-adaptive: a production corpus whose scan already
+    * (e.g. `Dedup.minhashSignature`'s md5 of every shingle, which has no
+    * shuffle of its own to spread it: one task per file otherwise). The
+    * condition makes it scale-adaptive: a production corpus whose scan already
     * splits to ≥ parallelism pays NO extra shuffle. Round-robin
     * repartition is retry-safe (sortBeforeRepartition stays on; inputs
     * carry no non-determinism). */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.FastMd5.fastMd5
+import graft.functions.MinhashSig.minhashSig
 
 /** Document deduplication for a training-data pipeline: exact (hash groupBy),
   * n-gram Jaccard, MinHash+LSH, and SimHash — each expressed with stock
@@ -13,9 +14,9 @@ import graft.functions.FastMd5.fastMd5
   *
   * Scale design (100 TB):
   *  - exact dedup shuffles one (16-byte hash, doc_id) pair per doc;
-  *  - MinHash signatures are built in ONE aggregation over the exploded
-  *    shingle set (16 min() columns), so the shuffle carries |docs| rows of
-  *    16 fixed-width strings — no per-hash re-scan of the corpus;
+  *  - MinHash signatures are one native per-row kernel
+  *    ([[graft.functions.MinhashSig]]): a document's shingles never become
+  *    rows, so building the signature shuffles nothing;
   *  - LSH banding turns the O(n²) similarity join into equi-joins on band
   *    keys; only same-bucket candidates are verified;
   *  - the exact-Jaccard verifier joins on shingles, which is only run within
@@ -354,16 +355,14 @@ object Dedup {
     confirmed.unionByName(definitelyNew)
   }
 
-  /** (doc_id, shingle) exploded view, distinct per doc. */
-  private def shingleRows(docs: DataFrame, blockCol: Option[String],
-                          textCol: String): DataFrame = {
-    val cols = Seq(col("doc_id")) ++ blockCol.map(col) :+
-      explode(shingles(col(textCol))).as("s")
-    // spread BEFORE the explode (r20): the shingle explode + md5 is the
+  /** (doc_id, block, shingle) exploded view, distinct per doc. */
+  private def shingleRows(docs: DataFrame, blockCol: String,
+                          textCol: String): DataFrame =
+    // spread BEFORE the explode (r20): the shingle explode is the
     // corpus-sized CPU of every consumer and otherwise serializes in a
     // one-file scan task — see Checkpoints.spread
-    Checkpoints.spread(docs).select(cols: _*)
-  }
+    Checkpoints.spread(docs).select(col("doc_id"), col(blockCol),
+      explode(shingles(col(textCol))).as("s"))
 
   /** Exact n-gram Jaccard near-dup pairs within a blocking column (e.g.
     * language or shard). The shingle equi-join only pairs documents sharing
@@ -447,7 +446,7 @@ object Dedup {
         // configuration; the df-capped 100 TB form below keeps its
         // single-exchange shape (measured: this pattern there costs more
         // wall than it saves).
-        val sh = shingleRows(docs, Some(blockCol), textCol)
+        val sh = shingleRows(docs, blockCol, textCol)
           .repartition(col("s"), col(blockCol))
           .persist(StorageLevel.MEMORY_AND_DISK)
         val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -486,7 +485,7 @@ object Dedup {
         // flat; a disk-pinned columnar block costs two sequential local
         // reads and competes with nothing.
         val bounded = udaf(graft.functions.BoundedCollectLong(maxDf))
-        val posting = shingleRows(docs, Some(blockCol), textCol)
+        val posting = shingleRows(docs, blockCol, textCol)
           .groupBy(col(blockCol), col("s"))
           .agg(bounded(col("doc_id")).as("ds"))
           .filter(col("ds").isNotNull)
@@ -508,44 +507,35 @@ object Dedup {
         col("sa.n").as("na"), col("sb.n").as("nb"))
   }
 
-  /** MinHash signature: numHashes min-aggregates over the exploded shingles,
-    * via Kirsch-Mitzenmacher double hashing — h_i(s) = (a + (i+1)·b) mod P
-    * where (a, b) are two 32-bit slices of ONE md5(shingle) and
-    * P = 2³¹−1 (Mersenne prime; b is forced into [1, P−1] so a zero b can't
-    * collapse all hash functions onto a).
+  /** MinHash signature (doc_id, h0..h{numHashes−1}) over each document's
+    * distinct 3-token shingles, via Kirsch-Mitzenmacher double hashing —
+    * h_i = min over shingles s of (a(s) + (i+1)·b(s)) mod P, where (a, b)
+    * are two 32-bit slices of ONE md5(s) and P = 2³¹−1 (Mersenne prime; b
+    * is forced into [1, P−1] so a zero b can't collapse all hash functions
+    * onto a). One md5 per shingle derives the whole family by integer
+    * arithmetic (provably sufficient for minwise estimation — Kirsch &
+    * Mitzenmacher 2006), and the signature is fixed-width longs. DuckDB
+    * reproduces the exact values (md5 + the same mod arithmetic), so
+    * oracles stay bit-exact.
     *
-    * Why: the naive scheme hashes every shingle numHashes times
-    * (md5(i || ":" || s)); at 100 TB that is numHashes corpus-sized md5
-    * passes and a signature of numHashes 32-char strings in every shuffle.
-    * Double hashing computes one md5 per shingle and derives the family by
-    * integer arithmetic (provably sufficient for minwise estimation —
-    * Kirsch & Mitzenmacher 2006), and the signature shrinks to fixed-width
-    * longs. Measured at sf0.1: signature build ~2.3× faster, identical LSH
-    * recall on the planted near-dup pairs. DuckDB reproduces the exact
-    * values (md5 + the same mod arithmetic), so oracles stay bit-exact. */
+    * Plan: spread, then one projection of the native
+    * [[graft.functions.MinhashSig]] kernel, then h_i = sig[i] — no explode
+    * and no `groupBy(doc_id)`, so one row per input row (doc_id is the
+    * corpus key). Documents under 3 tokens (and null text) have no
+    * shingle and no row; they are dropped by a token-count predicate on
+    * the text BEFORE the kernel's projection, so the optimizer has no
+    * `isnotnull(sig)` filter to push below it (which would run every md5
+    * twice). The kernel is referenced by every h_i, so `CollapseProject`
+    * keeps it in its own projection: one evaluation per row. */
   def minhashSignature(docs: DataFrame, numHashes: Int,
                        textCol: String = "text"): DataFrame = {
-    val P = 2147483647L
-    val sh = shingleRows(docs, None, textCol)
-      .withColumn("__h", fastMd5(col("s")))
-      .withColumn("__a", conv(substring(col("__h"), 1, 8), 16, 10).cast("long") % P)
-      .withColumn("__b", conv(substring(col("__h"), 9, 8), 16, 10).cast("long") % (P - 1) + 1)
-    val sigCols = (0 until numHashes)
-      .map(i => min((col("__a") + lit((i + 1).toLong) * col("__b")) % P).as(s"h$i"))
-    sh.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
+    val n = 3
+    Checkpoints.spread(docs)
+      .filter(size(split(col(textCol), " ", n)) >= n)
+      .select(col("doc_id"), minhashSig(col(textCol), n, numHashes).as("__sig"))
+      .select(col("doc_id") +: (0 until numHashes).map(i => col("__sig")(i).as(s"h$i")): _*)
   }
 
-  /** MinHash+LSH near-dup pairs: band-bucket candidates, then signature
-    * agreement (estimated Jaccard) ≥ threshold.
-    *
-    * The full signature rides along on the band rows (numHashes fixed-width
-    * strings), so agreement is computed directly on the band-join output —
-    * no re-join back to the signature relation. The signature is PERSISTED
-    * before the band self-join: self-joins re-execute lineage per side, and
-    * the shingle explode + 16-min aggregation is the expensive stage — at
-    * 100 TB the signature is the thing you materialize ONCE. The self-join
-    * is pinned shuffle-hash: both sides are the same size by construction,
-    * so a broadcast is never the right physical choice at scale. */
   /** (doc_id, h0..h{n-1}, band, bkey) — one row per (doc, band), the bkey
     * an md5 of that band's signature slice. The full signature rides along
     * so band-join consumers compute agreement without a re-join. */
@@ -623,6 +613,18 @@ object Dedup {
       (math.abs(p.inflection - targetJaccard), -p.numHashes, p.rowsPerBand))
   }
 
+  /** MinHash+LSH near-dup pairs: band-bucket candidates, then signature
+    * agreement (estimated Jaccard) ≥ threshold.
+    *
+    * The full signature rides along on the band rows (numHashes longs), so
+    * agreement is computed directly on the band-join output — no re-join
+    * back to the signature relation. The signature is PERSISTED before the
+    * band self-join: self-joins re-execute lineage per side, and the
+    * signature's md5 of every shingle is the corpus-sized CPU of this
+    * operator — at 100 TB the signature is the thing you materialize ONCE.
+    * The self-join is pinned shuffle-hash: both sides are the same size by
+    * construction, so a broadcast is never the right physical choice at
+    * scale. */
   def minhashLshPairs(docs: DataFrame, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5, textCol: String = "text"): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
@@ -679,10 +681,12 @@ object Dedup {
     def hexVal(c: Column): Column =
       when(ascii(c) >= 97, ascii(c) - 87).otherwise(ascii(c) - 48)
     // NOT spread (r20, measured): this explode's partial aggregate is one
-    // count per (doc, token) — ~0.1 s serial at sf0.1 where the minhash
-    // signature's was 3.7 s — and hashedTfCosinePairs builds this relation
-    // on several branches, so the extra exchange cost 12 jobs for no
-    // serial-CPU win (t_hashed_tf_neardup 41 → 53 jobs when tried).
+    // count per (doc, token), ~0.1 s serial at sf0.1, and
+    // hashedTfCosinePairs builds this relation on several branches, so the
+    // extra exchange cost 12 jobs for no serial-CPU win
+    // (t_hashed_tf_neardup 41 → 53 jobs when tried). A consumer that needs
+    // only each doc's vector, not the rows, takes the native
+    // [[graft.functions.HashedTf]] instead (TextStats.qualityScoreAgainst).
     docs
       .select(col("doc_id"), explode(TextStats.tokens(col(textCol))).as("t"))
       .groupBy(col("doc_id"), col("t"))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.FastMd5.fastMd5
+import graft.functions.HashedTf.hashedTf
+import graft.functions.LongArrayDot
 
 /** Text-analysis operators for a training-data pipeline: tokenization, token
   * statistics, quality scoring, language-ID scoring, and content
@@ -860,39 +862,37 @@ object TextStats {
     * (which would need a smoothing constant the oracle must mirror
     * anyway; a composition with the vocab-coverage gate covers it).
     *
-    * Scale shape: the batch is touched twice (the per-doc bigram count
-    * and a narrow size() projection for n_trans — no shared relation, so
-    * nothing to pin); the model joins on the bigram, vocabulary-shaped.
-    * Output (doc_id, n_trans, n_scored, sum_q3, avg_bits_x100,
+    * Scale shape: ONE shuffle. Every bigram occurrence is a row (a doc
+    * under 2 tokens, or null text, keeps one null row through
+    * `explode_outer`, carrying its `n_trans`), left-joined to the model —
+    * vocabulary-shaped and broadcast by the planner on its own size, with
+    * each bigram's centibit cost computed once per model row — and
+    * grouped by `doc_id`: n_scored counts the matched rows, and
+    * avg_bits_x100 is 0 where n_scored is 0, so ANSI mode never divides by
+    * zero. Output (doc_id, n_trans, n_scored, sum_q3, avg_bits_x100,
     * ppx_keep). */
   def ngramPerplexityAgainst(batch: DataFrame, model: DataFrame,
                              maxAvgBitsX100: Int = 1200,
                              textCol: String = "text"): DataFrame = {
     val t = col("__t")
-    val toks = batch.select(col("doc_id"), tokens(col(textCol)).as("__t"))
-    val db = toks.filter(size(t) >= 2)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(1), size(t) - 1),
-        i => struct(element_at(t, i).as("w1"),
-          element_at(t, i + 1).as("w2")))).as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("k"))
-    val scored = db.join(model, Seq("w1", "w2"))
-      .withColumn("__p", greatest(col("p_ppm"), lit(1L)))
-      .withColumn("__q3", lit(60L) -
-        (length(bin(col("__p") * col("__p") * col("__p"))) - 1).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("k")).as("n_scored"), sum(col("k") * col("__q3")).as("sum_q3"))
-    toks
+    val p = greatest(col("p_ppm"), lit(1L))
+    val costs = model.select(col("w1"), col("w2"),
+      (lit(60L) - (length(bin(p * p * p)) - 1).cast("long")).as("__q3"))
+    batch.select(col("doc_id"), tokens(col(textCol)).as("__t"))
       .select(col("doc_id"),
-        greatest(size(t) - 1, lit(0)).cast("long").as("n_trans"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_trans"),
-        coalesce(col("n_scored"), lit(0L)).as("n_scored"),
-        coalesce(col("sum_q3"), lit(0L)).as("sum_q3"),
-        coalesce(expr("100 * sum_q3 div (3 * n_scored)"), lit(0L))
-          .as("avg_bits_x100"))
+        greatest(size(t) - 1, lit(0)).cast("long").as("n_trans"),
+        explode_outer(when(size(t) >= 2, transform(
+          sequence(lit(1), size(t) - 1),
+          i => struct(element_at(t, i).as("w1"),
+            element_at(t, i + 1).as("w2"))))).as("b"))
+      .select(col("doc_id"), col("n_trans"), col("b.w1").as("w1"),
+        col("b.w2").as("w2"))
+      .join(costs, Seq("w1", "w2"), "left")
+      .groupBy(col("doc_id"))
+      .agg(max(col("n_trans")).as("n_trans"), count(col("__q3")).as("n_scored"),
+        coalesce(sum(col("__q3")), lit(0L)).as("sum_q3"))
+      .withColumn("avg_bits_x100", when(col("n_scored") === 0, lit(0L))
+        .otherwise(expr("100 * sum_q3 div (3 * n_scored)")))
       .withColumn("ppx_keep",
         (col("avg_bits_x100") <= maxAvgBitsX100).cast("long"))
   }
@@ -1114,22 +1114,27 @@ object TextStats {
     * q_keep = (margin > 0); docs with no scoreable features (empty text)
     * keep margin 0 → rejected, the conservative default.
     *
-    * Scale shape: one feature explode over the batch + a dims-row
-    * broadcast weight join + one per-doc combinable aggregate — the
-    * trainer's per-round margin pass, run exactly once, with no training
-    * lineage in the plan. */
+    * Scale shape: the batch is never shuffled. The weight relation folds
+    * into ONE row holding a dims-long array (w[j] = the sum of the weights
+    * at idx j, 0 where none: exactly what the sparse join summed), which
+    * is broadcast-cross-joined, and the margin is one projection,
+    * `long_array_dot(hashed_tf(text, dims), w)` — the native
+    * [[graft.functions.HashedTf]] vector against the folded weights. Lazy
+    * like every operator here; null text has no vector → margin 0. */
   def qualityScoreAgainst(batch: DataFrame, weights: DataFrame,
                           dims: Int = 64,
                           textCol: String = "text"): DataFrame = {
-    val feats = graft.ops.Dedup.hashedTfFeatures(batch, dims, textCol)
-      .select(col("doc_id"), col("idx").cast("long").as("idx"), col("v"))
-    val scored = feats.join(broadcast(weights), Seq("idx"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("v") * col("weight")).as("margin"))
-    batch.select(col("doc_id")).join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("margin"), lit(0L)).as("margin"),
-        (coalesce(col("margin"), lit(0L)) > 0).cast("long").as("q_keep"))
+    val ws = col("__ws")
+    val w = weights.coalesce(1) // dims rows: fold them without a shuffle
+      .agg(collect_list(struct(col("idx").cast("long").as("i"),
+        coalesce(col("weight").cast("long"), lit(0L)).as("w"))).as("__ws"))
+      .select(transform(sequence(lit(0L), lit(dims - 1L)),
+        j => aggregate(filter(ws, x => x("i") === j), lit(0L),
+          (acc, x) => acc + x("w"))).as("__w"))
+    batch.crossJoin(broadcast(w))
+      .select(col("doc_id"), coalesce(LongArrayDot.dot(
+        hashedTf(col(textCol), dims), col("__w")), lit(0L)).as("margin"))
+      .withColumn("q_keep", (col("margin") > 0).cast("long"))
   }
 
   /** Corpus-relative quality gate: keep documents whose [[qualityScore]]
